@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline query set on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":…, "queries":{name:sec}}.
   *
@@ -132,50 +130,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Checkpoint-file checksums OFF (r16, measured): Spark 4.1 writes a
-      // checksum SIDECAR file for every state/offset/commit checkpoint
-      // file and every state-store commit BLOCKS awaiting it through a
-      // small thread pool (thread dumps: all 32 executor threads parked
-      // in ChecksumCancellableFSDataOutputStream.close → awaitResult
-      // inside finalizeDeltaFile) — one extra create+write+fsync per
-      // store per batch, 128 of them per micro-batch for a stream-stream
-      // join (4 stores × 32 partitions). Pure integrity hardening for
-      // long-lived checkpoints, pure overhead for these per-run dirs; it
-      // doubles checkpoint I/O requests on a real cluster too. Env knob
-      // to re-enable for deployments that want the integrity check.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // FileSystem-based checkpoint manager + raw local fs (r16, thread
-      // dumps): the default FileContext manager renames each checkpoint
-      // file through Hadoop's ChecksumFs, which (no native libs here)
-      // FORKS a shell process per rename (readlink) and writes a .crc
-      // sidecar per file — executor threads showed ProcessImpl.forkAndExec
-      // under finalizeDeltaFile. FileSystemBased renames via
-      // File.renameTo (atomic on a local fs), no fork. (fs.file.impl =
-      // RawLocalFileSystem was tried for the .crc sidecars too and
-      // REVERTED: Hadoop's FileSystem.getLocal casts the file:// fs to
-      // LocalFileSystem, which RocksDB's checkpoint upload relies on —
-      // StreamFuzzSpec caught the ClassCastException.) FileSystemBased
-      // is Spark's own fallback manager for schemes without FileContext
-      // support, so HDFS/S3 deployments are untouched.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      // state store backend knob (default HDFS-backed; rocksdb = the
-      // large-state production choice: state off-heap, no GC pressure)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus(32)
+    val spark = Sessions.local(cpus)
     val qs = SparkEntry.queries ++ SparkEntry.benchOnly
     // warmup: touch the scan paths + JIT the write pipeline, untimed
     try qs("q_filter_project")(spark, sfDir)
@@ -221,7 +177,7 @@ object Bench {
         // excluded from `value` so totals stay round-comparable.
         val c0 = System.nanoTime()
         try {
-          spark.range(0, 200000000L, 1, cpus.toInt)
+          spark.range(0, 200000000L, 1, cpus)
             .agg(org.apache.spark.sql.functions.expr(
               "bit_xor(xxhash64(id))").as("x"))
             .write.format("noop").mode("overwrite").save()
@@ -233,7 +189,7 @@ object Bench {
         // thread CPU oversubscription and tmp-dir fsync latency — the r14
         // driver run passed the CPU calib while the suite ran 1.56× slow
         // on what turned out to be exactly these two.
-        try record("calib_par", parProbe(cpus.toInt))
+        try record("calib_par", parProbe(cpus))
         catch { case e: Throwable => System.err.println(s"[bench] calib_par: ${e.getMessage}") }
         try record("calib_io", ioProbe())
         catch { case e: Throwable => System.err.println(s"[bench] calib_io: ${e.getMessage}") }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sql.{FuzzGen, SqlEngine}
 
 /** Differential-fuzzer dump: generate FuzzGen's seeded query pairs, run
@@ -24,15 +22,7 @@ object Fuzz {
     val n = if (args.length > 1) args(1).toInt else 170
     val seed = if (args.length > 2) args(2).toLong else 1L
     val rows1 = if (args.length > 3) args(3).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(4))
     new java.io.File(outDir).mkdirs()
 
     val (t1, t2) = FuzzGen.tables(spark, seed, rows1)

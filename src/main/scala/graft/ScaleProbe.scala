@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: runs the same plan shapes on 1× and 10× the sf0.1 data
@@ -14,36 +14,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // checkpoint-file checksum sidecars off — see Bench.scala (r16):
-      // every state-store commit otherwise blocks on an async checksum
-      // file write; env knob to re-enable
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // FileSystem-based checkpoint manager + raw local fs (r16, thread
-      // dumps): the default FileContext manager renames each checkpoint
-      // file through Hadoop's ChecksumFs, which (no native libs here)
-      // FORKS a shell process per rename (readlink) and writes a .crc
-      // sidecar per file — executor threads showed ProcessImpl.forkAndExec
-      // under finalizeDeltaFile. FileSystemBased renames via
-      // File.renameTo (atomic on a local fs), no fork. (fs.file.impl =
-      // RawLocalFileSystem was tried for the .crc sidecars too and
-      // REVERTED: Hadoop's FileSystem.getLocal casts the file:// fs to
-      // LocalFileSystem, which RocksDB's checkpoint upload relies on —
-      // StreamFuzzSpec caught the ClassCastException.) FileSystemBased
-      // is Spark's own fallback manager for schemes without FileContext
-      // support, so HDFS/S3 deployments are untouched.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(32))
     import spark.implicits._
 
     def x10(df: DataFrame): DataFrame = (1 to 10).map(_ => df).reduce(_ unionAll _)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,36 +9,7 @@ object Verify {
     // only — the driver always passes exactly two args, running everything)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // checkpoint-file checksum sidecars off — see Bench.scala (r16):
-      // every state-store commit otherwise blocks on an async checksum
-      // file write; env knob to re-enable
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // FileSystem-based checkpoint manager + raw local fs (r16, thread
-      // dumps): the default FileContext manager renames each checkpoint
-      // file through Hadoop's ChecksumFs, which (no native libs here)
-      // FORKS a shell process per rename (readlink) and writes a .crc
-      // sidecar per file — executor threads showed ProcessImpl.forkAndExec
-      // under finalizeDeltaFile. FileSystemBased renames via
-      // File.renameTo (atomic on a local fs), no fork. (fs.file.impl =
-      // RawLocalFileSystem was tried for the .crc sidecars too and
-      // REVERTED: Hadoop's FileSystem.getLocal casts the file:// fs to
-      // LocalFileSystem, which RocksDB's checkpoint upload relies on —
-      // StreamFuzzSpec caught the ClassCastException.) FileSystemBased
-      // is Spark's own fallback manager for schemes without FileContext
-      // support, so HDFS/S3 deployments are untouched.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

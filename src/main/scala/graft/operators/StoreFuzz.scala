@@ -7,6 +7,7 @@ import scala.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.functions.PipelineFunctions._
 import graft.queries.DedupQueries
 
@@ -339,14 +340,7 @@ object StoreFuzz {
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val n = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(8))
     var ok = 0; var fail = 0
     var comp = 0; var rep = 0; var vac = 0; var orph = 0; var dups = 0
     seeds.foreach { s =>

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Sessions
 import graft.streaming.Engine
 
 /** LEDGER-TRANSPORT schedule fuzzer: generative crash/resume
@@ -205,14 +206,7 @@ object LedgerFuzz {
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val n = if (args.length > 1) args(1).toInt else 6
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(8))
     var ok = 0; var fail = 0; var rst = 0; var brst = 0; var down = 0
     seeds.foreach { s =>
       run(spark, s, n).foreach { r =>

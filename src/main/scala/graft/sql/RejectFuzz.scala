@@ -4,6 +4,8 @@ import scala.util.Random
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
+
 /** NEGATIVE fuzzer for the rejection surface (§2.9): every other fuzzer
   * certifies that well-formed queries produce the right ANSWER; this one
   * certifies that ILL-formed queries produce the right KIND of error.
@@ -416,14 +418,7 @@ object RejectFuzz {
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val nBase = if (args.length > 1) args(1).toInt else 60
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(8))
     var legal = 0; var rejected = 0; var analysis = 0; var runtime = 0
     var crash = 0
     seeds.foreach { s =>

@@ -7,6 +7,8 @@ import scala.util.Random
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Sessions
+
 /** STREAMING-SQL grammar fuzzer (r15): the batch dialect is certified
   * generatively (FuzzGen × DuckDB, 57/57 productions) and the streaming
   * OPERATORS are certified generatively (StreamFuzz's 14 topology kinds,
@@ -494,14 +496,7 @@ object StreamSqlFuzz {
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val n = if (args.length > 1) args(1).toInt else 14
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(8))
     var ok = 0; var fail = 0; var ins = 0; var nulls = 0; var surv = 0
     seeds.foreach { s =>
       run(spark, s, n).foreach { rep =>

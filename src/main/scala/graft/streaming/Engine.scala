@@ -109,8 +109,7 @@ class Engine(val spark: SparkSession) {
     * and is recorded but inert. */
   def createStream(name: String, schema: StructType,
                    options: Map[String, String] = Map.empty): Unit = {
-    require(!streams.contains(name) && !fileStreams.contains(name),
-      s"stream $name exists")
+    requireNewStream(name)
     // FORMAT='wire': payloads are the reference's extended JSON and are
     // decoded on read (jsonValueToFlowValue, Rts/Old.hs:159-198)
     val wire = options.get("FORMAT").exists(_.equalsIgnoreCase("wire"))
@@ -143,6 +142,14 @@ class Engine(val spark: SparkSession) {
   def showStreams: Seq[String] =
     (streams.keys ++ fileStreams.keys ++ socketStreams.keys ++
       ledgerStreams.keys).toSeq.sorted
+
+  /** Stream names are unique across transports: a second registration
+    * under any transport would leave INSERT and SELECT resolving the name
+    * to different sources. */
+  private def requireNewStream(name: String): Unit =
+    require(!streams.contains(name) && !fileStreams.contains(name) &&
+      !socketStreams.contains(name) && !ledgerStreams.contains(name),
+      s"stream $name exists")
 
   /** INSERT INTO name: append JSON payloads (AST.hs:777-804 json form) —
     * uniform across transports, like the reference's append-to-log:
@@ -195,8 +202,7 @@ class Engine(val spark: SparkSession) {
     * [[attachFileSink]] enforces the one-sink half of this loudly. */
   def createFileStream(name: String, dir: String, schema: StructType,
                        format: String = "json", wire: Boolean = false): Unit = {
-    require(!streams.contains(name) && !fileStreams.contains(name),
-      s"stream $name exists")
+    requireNewStream(name)
     fileStreams(name) = FileStreamEntry(dir, schema, if (wire) "text" else format, wire)
   }
 
@@ -222,9 +228,7 @@ class Engine(val spark: SparkSession) {
     * (Kafka, files) plugs into the same seam with its own format string. */
   def createSocketStream(name: String, host: String, port: Int,
                          schema: StructType, wire: Boolean = false): Unit = {
-    require(!streams.contains(name) && !fileStreams.contains(name) &&
-      !socketStreams.contains(name) && !ledgerStreams.contains(name),
-      s"stream $name exists")
+    requireNewStream(name)
     socketStreams(name) = SocketStreamEntry(host, port, schema, wire)
   }
 
@@ -242,9 +246,7 @@ class Engine(val spark: SparkSession) {
 
   def createLedgerStream(name: String, host: String, port: Int,
                          schema: StructType, wire: Boolean = false): Unit = {
-    require(!streams.contains(name) && !fileStreams.contains(name) &&
-      !socketStreams.contains(name) && !ledgerStreams.contains(name),
-      s"stream $name exists")
+    requireNewStream(name)
     ledgerStreams(name) = LedgerStreamEntry(host, port, schema, wire)
   }
 

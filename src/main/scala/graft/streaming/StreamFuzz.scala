@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Sessions
+
 /** Streaming twin FUZZER (r11 VERDICT #1): the differential method that
   * certifies the batch dialect (FuzzGen + DuckDB), generalized to the
   * streaming surface. Each scenario draws a random topology — windowed
@@ -595,14 +597,7 @@ object StreamFuzz {
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val n = if (args.length > 1) args(1).toInt else 28
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(8))
     var ok = 0; var fail = 0
     seeds.foreach { s =>
       run(spark, s, n).foreach { rep =>

@@ -54,7 +54,11 @@ object StreamOps {
     * Symmetric watermarks on both sides let Spark expire buffered state at
     * exactly the reference's retention bound (jwBeforeMs/jwAfterMs,
     * Codegen/V1.hs:287-291). Outer types need both watermarks — present by
-    * construction. */
+    * construction.
+    *
+    * Banding (r16, below) added the bucket column `__graft_jb` to the
+    * streaming join's state key, so a checkpoint written before r16 does
+    * not resume: Spark's state-schema check rejects it at restart. */
   def intervalJoin(left: DataFrame, right: DataFrame,
                    leftTs: String, rightTs: String,
                    before: String, after: String,
@@ -105,8 +109,11 @@ object StreamOps {
   def bandedIntervalJoin(ldf: DataFrame, rdf: DataFrame,
                          lts: Column, rts: Column, widthUs: Long,
                          cond: Column, joinType: String = "inner"): DataFrame = {
-    val lb = floor(unix_micros(lts) / lit(widthUs)).cast("long")
-    val rb = floor(unix_micros(rts) / lit(widthUs)).cast("long")
+    // a zero width (WITHIN 0 SECONDS through the Scala API, which skips
+    // Validate) would divide by zero; 1 µs buckets band exact-time pairs
+    val w = math.max(1L, widthUs)
+    val lb = floor(unix_micros(lts) / lit(w)).cast("long")
+    val rb = floor(unix_micros(rts) / lit(w)).cast("long")
     joinType match {
       case "inner" | "left" | "leftouter" | "left_outer" =>
         val l2 = ldf.withColumn("__graft_jb", lb)

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Sessions
+
 /** VIEW-MAINTENANCE differential fuzzer (r12 VERDICT #1): the largest
   * custom body in the engine — complete-mode snapshots, incremental
   * bucket-upsert, per-trigger delta logs with threshold compaction,
@@ -575,14 +577,7 @@ object ViewFuzz {
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val n = if (args.length > 1) args(1).toInt else 12
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus(8))
     var ok = 0; var fail = 0; var pruned = 0; var compacted = 0; var expired = 0
     seeds.foreach { s =>
       val nSide = math.max(2, n / 3) // multi-view + race tiers per seed

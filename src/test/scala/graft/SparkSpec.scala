@@ -12,20 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // checkpoint-file checksum sidecars off — see Bench.scala (r16): every
-    // state-store commit otherwise blocks on an async checksum file write
-    .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // FileSystem-based manager + raw local fs — see Bench.scala (r16):
-    // the FileContext default forks a shell process per checkpoint rename
-    .config("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing." +
-        "FileSystemBasedCheckpointFileManager")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .getOrCreate()
+  /** Fixed at 4 threads, not [[Sessions.cpus]]: the suite runs the same
+    * way whatever SPARK_GRAFT_CPUS the test runner exports. */
+  lazy val session: SparkSession = Sessions.local(4)
 }

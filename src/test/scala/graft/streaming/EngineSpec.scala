@@ -143,6 +143,27 @@ class EngineSpec extends SparkSpec {
     e.terminate("outlo")
   }
 
+  test("zero-width intervalJoin through the Scala API equals the equality join") {
+    // the dialect's Validate refuses WITHIN 0; the Scala API does not, and
+    // the band width divides by it (DIVIDE_BY_ZERO under ANSI unclamped)
+    import spark.implicits._
+    val t = (s: String) => java.sql.Timestamp.valueOf(s)
+    val l = Seq(("a", 1L, t("2024-01-01 00:00:00")),
+      ("b", 2L, t("2024-01-01 00:00:01")),
+      ("c", 3L, t("2024-01-01 00:00:02.000001"))).toDF("k", "v", "lts")
+    val r = Seq(("a", 10L, t("2024-01-01 00:00:00")),
+      ("b", 20L, t("2024-01-01 00:00:01.000001")),
+      ("c", 30L, t("2024-01-01 00:00:02.000001")),
+      ("c", 31L, t("2024-01-01 00:00:02"))).toDF("k2", "w", "rts")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "w").as[(String, Long, Long)].collect().toSet
+    val got = rows(StreamOps.intervalJoin(l, r, "lts", "rts",
+      "0 seconds", "0 seconds", col("k") === col("k2")))
+    val want = rows(l.join(r, col("k") === col("k2") && col("lts") === col("rts")))
+    assert(want == Set(("a", 1L, 10L), ("c", 3L, 30L)))
+    assert(got == want)
+  }
+
   test("materialized view + pull query (Core/View.hs:166-254)") {
     val e = newEngine
     e.createStream("s5", schema)
@@ -459,6 +480,22 @@ class EngineSpec extends SparkSpec {
     // before this check, insert() would feed an invisible memory twin
     intercept[IllegalArgumentException](e.createStream("dup20", schema))
     e.dropStream("dup20")
+  }
+
+  test("a stream name is unique across all four transports") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_col2").toString
+    val e = newEngine
+    // registering a ledger or socket stream opens no connection
+    e.createLedgerStream("dup21", "localhost", 1, schema)
+    e.createSocketStream("dup22", "localhost", 1, schema)
+    for (n <- Seq("dup21", "dup22")) {
+      // a second registration would let INSERT feed a MemoryStream (or a
+      // file dir) while SELECT reads the network source
+      intercept[IllegalArgumentException](e.createStream(n, schema))
+      intercept[IllegalArgumentException](e.createFileStream(n, dir, schema))
+    }
+    assert(e.showStreams == Seq("dup21", "dup22"))
+    e.dropStream("dup21"); e.dropStream("dup22")
   }
 
   test("insertSelect into a wire memory stream re-encodes through the wire format") {
