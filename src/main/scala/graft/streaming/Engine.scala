@@ -2,11 +2,16 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, NumericType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, NumericType, StringType, StructField, StructType}
 
 /** The engine facade: streams, continuous queries, and materialized views —
   * the reference's server surface (SURVEY §3) re-expressed on Structured
@@ -824,10 +829,10 @@ class Engine(val spark: SparkSession) {
     * (ignoreMissingFiles on the pull read). Runs opportunistically at pull
     * time; idempotent, O(#partition dirs) listing. */
   private def gcAppendView(state: AppendViewState): Unit =
-    for (s <- state.bucketSecs; ret = intervalSeconds(state.retention.get)) {
+    for (s <- state.bucketSecs) { // one bucket = one retention width
       val (fs, dirPath) = hadoopFs(state.dir)
       if (fs.exists(dirPath)) {
-        val horizonBucket = (System.currentTimeMillis() / 1000L - ret) / s
+        val horizonBucket = (System.currentTimeMillis() / 1000L - s) / s
         fs.listStatus(dirPath).foreach { st =>
           val n = st.getPath.getName
           if (st.isDirectory && n.startsWith("graft_ret_bucket=") &&
@@ -847,7 +852,10 @@ class Engine(val spark: SparkSession) {
     * A bucket maps to a LIST of leaf paths: in the default whole-bucket
     * upsert mode the list is always one element (the bucket's current
     * generation); in delta-log mode it is the compacted base plus the
-    * per-trigger delta files since the last compaction. */
+    * per-trigger delta files since the last compaction. Every leaf holds
+    * exactly one parquet file, and reads of leaves go through the data
+    * files recorded for them in `files` ([[readLeaves]]), so no pull and no
+    * trigger lists a directory or launches a listing job. */
   private final class IncViewState(val dir: String, val schema: StructType,
                                    val keys: Seq[String], val buckets: Int,
                                    val deltaLog: Boolean,
@@ -861,6 +869,11 @@ class Engine(val spark: SparkSession) {
       * zones visible to pulls; trimmed to the serving manifest's paths on
       * persist (history readers never prune). See [[ZoneMap]]. */
     @volatile var zones: ZoneMap.Zones = Map.empty
+    /** Leaf path → its data files, listed once right after the leaf is
+      * written and assigned BEFORE the manifest serving it flips (the rule
+      * `zones` follows); trimmed to the history's leaves on GC and rebuilt
+      * from the manifest on recovery. */
+    @volatile var files: Map[String, Seq[FileStatus]] = Map.empty
     /** Retention predicate over served/compacted rows (true = keep);
       * DURATION semantics, same wall-clock form as the stream read path. */
     def live: Column = (retainOn, retention) match {
@@ -911,9 +924,12 @@ class Engine(val spark: SparkSession) {
     * semantics with the state in shared storage instead of driver memory.
     *
     * Layout: each batch writes `dir/g<batchId>/graft_bucket=<b>/` for affected
-    * buckets only; a manifest (bucket → leaf path) flips atomically and is
+    * buckets only, one parquet file per leaf (every write repartitions by
+    * bucket first); a manifest (bucket → leaf path) flips atomically and is
     * persisted for engine-restart recovery. Unchanged buckets keep serving
-    * their old generation's files untouched. `keys` must be output columns
+    * their old generation's files untouched. Pulls and maintenance reads
+    * scan the files recorded when each leaf was written, so they run no
+    * listing job however many buckets they span. `keys` must be output columns
     * of `plan` (the upsert identity); `buckets` bounds the per-trigger
     * rewrite granularity — at 100 TB size it so one bucket's parquet fits
     * comfortably in executor memory (e.g. thousands). */
@@ -986,13 +1002,9 @@ class Engine(val spark: SparkSession) {
   private def upsertWholeBucket(state: IncViewState, delta: DataFrame,
                                 affected: Set[Int], genDir: String,
                                 bucketOf: => Column): Map[Int, List[String]] = {
-    val existingPaths =
-      state.manifest.view.filterKeys(affected).values.flatten.toSeq
-    val current =
-      (if (existingPaths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], state.schema)
-      else spark.read.schema(state.schema).parquet(existingPaths: _*))
-        .where(state.live) // bucket rewrites shed rows past retention
+    val current = readLeaves(state, state.schema,
+        state.manifest.view.filterKeys(affected).values.flatten.toSeq)
+      .where(state.live) // bucket rewrites shed rows past retention
     val deltaKeys = delta.select(state.keys.map(col): _*).alias("__dk")
     val antiCond = state.keys.map(k =>
       current(k) <=> org.apache.spark.sql.functions.col(s"__dk.$k"))
@@ -1001,11 +1013,48 @@ class Engine(val spark: SparkSession) {
       .join(deltaKeys, antiCond, "left_anti")
       .withColumn("graft_bucket", bucketOf)
       .unionByName(delta)
-    merged.write.partitionBy("graft_bucket").mode("overwrite").parquet(genDir)
+    val leaves = affected.map(b => b -> s"$genDir/graft_bucket=$b").toMap
+    writeLeaves(state, merged, genDir, leaves.values)
     // returned, not assigned: the caller flips the serving manifest at its
     // seam-instrumented visibility point (createViewIncremental)
-    state.manifest ++
-      affected.map(b => b -> List(s"$genDir/graft_bucket=$b"))
+    state.manifest ++ leaves.map { case (b, leaf) => b -> List(leaf) }
+  }
+
+  /** Write `df` (which carries graft_bucket) under `dir` as ONE parquet
+    * file per bucket — the repartition gives each bucket to a single
+    * writing task — then record the data files of the new `leaves`. */
+  private def writeLeaves(state: IncViewState, df: DataFrame, dir: String,
+                          leaves: Iterable[String]): Unit = {
+    df.repartition(col("graft_bucket"))
+      .write.partitionBy("graft_bucket").mode("overwrite").parquet(dir)
+    val (fs, _) = hadoopFs(state.dir)
+    state.files = state.files ++ leaves.map(leaf => leaf -> dataFiles(fs, leaf))
+  }
+
+  /** The data files of one leaf directory (hidden `_`/`.` names skipped,
+    * as Spark's own file listing does). */
+  private def dataFiles(fs: FileSystem, leaf: String): Seq[FileStatus] =
+    fs.listStatus(new Path(leaf)).toSeq.filterNot(st =>
+      st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+
+  /** A scan over the recorded data files of `leaves` with the given
+    * schema: a parquet relation over a [[KnownFiles]] index, so planning
+    * it lists nothing. The schema is read nullable, as `spark.read` reads
+    * any file source. */
+  private def readLeaves(state: IncViewState, schema: StructType,
+                         leaves: Seq[String]): DataFrame = {
+    val files = state.files
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case other => other
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new KnownFiles(leaves.flatMap(files)), new StructType(),
+      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat,
+      Map.empty)(spark))
   }
 
   /** DELTA-LOG upsert (opt-in; the hot-key refinement): each trigger writes
@@ -1090,8 +1139,8 @@ class Engine(val spark: SparkSession) {
   private def upsertDeltaLog(state: IncViewState, delta: DataFrame,
                              affected: Set[Int], genDir: String,
                              gen: Long): Map[Int, List[String]] = {
-    delta.withColumn("graft_gen", lit(gen))
-      .write.partitionBy("graft_bucket").mode("overwrite").parquet(genDir)
+    writeLeaves(state, delta.withColumn("graft_gen", lit(gen)), genDir,
+      affected.map(b => s"$genDir/graft_bucket=$b"))
     val zc = zonedCols(state.schema)
     // zones flip before the manifest below: a pull racing this trigger
     // either sees the old manifest (old zones suffice) or the new one
@@ -1111,31 +1160,30 @@ class Engine(val spark: SparkSession) {
         val compactDir = s"$genDir-c"
         val paths = toCompact.toSeq.flatMap(withDeltas)
         val merged = resolveLatest(
-          spark.read.schema(deltaSchema(state.schema)).parquet(paths: _*),
-          state.keys)
+          readLeaves(state, deltaSchema(state.schema), paths), state.keys)
           .where(state.live) // compaction sheds rows past retention
           .withColumn("graft_bucket",
             pmod(hash(state.keys.map(col): _*), lit(state.buckets)))
-          .persist() // written once, then one small zone agg
+          .persist() // read by a distinct, the write and a small zone agg
         try {
-          merged.write.partitionBy("graft_bucket").mode("overwrite").parquet(compactDir)
-          // fresh (not union-merged) zones: compaction sheds superseded and
-          // expired rows, so the compacted base's ranges tighten
-          state.zones = state.zones ++
-            collectZones(merged, zc, b => s"$compactDir/graft_bucket=$b")
           // A bucket whose every row EXPIRED compacts to NOTHING — the
           // partitioned write creates no graft_bucket=<b> dir for it, so
           // the manifest must record an EMPTY chain, not a path that was
           // never written (r13 ViewFuzz find: an update to an already-
           // expired key triggered compaction of an all-expired bucket and
           // every later pull died with PATH_NOT_FOUND on the dangling
-          // leaf). One tiny distinct over the already-persisted frame —
-          // the same driver bound as the affected-set collect.
+          // leaf). One tiny distinct over the persisted frame — the same
+          // driver bound as the affected-set collect.
           val survivors = merged.select("graft_bucket").distinct()
             .collect().map(_.getInt(0)).toSet
-          withDeltas ++ toCompact.map(b =>
-            b -> (if (survivors(b)) List(s"$compactDir/graft_bucket=$b")
-                  else Nil))
+          val leaves = toCompact.filter(survivors)
+            .map(b => b -> s"$compactDir/graft_bucket=$b").toMap
+          writeLeaves(state, merged, compactDir, leaves.values)
+          // fresh (not union-merged) zones: compaction sheds superseded and
+          // expired rows, so the compacted base's ranges tighten
+          state.zones = state.zones ++
+            collectZones(merged, zc, b => s"$compactDir/graft_bucket=$b")
+          withDeltas ++ toCompact.map(b => b -> leaves.get(b).toList)
         } finally merged.unpersist()
       }
   }
@@ -1201,6 +1249,8 @@ class Engine(val spark: SparkSession) {
         parts.head.toInt -> parts.tail
       }.toMap
       state.history = List(state.manifest)
+      state.files = state.manifest.values.flatten.map(leaf =>
+        leaf -> dataFiles(fs, leaf)).toMap
       val gen = st.getPath.getName.stripPrefix("manifest-g").stripSuffix(".txt")
       val zpath = new org.apache.hadoop.fs.Path(s"${state.dir}/zones-g$gen.txt")
       if (fs.exists(zpath)) {
@@ -1216,22 +1266,25 @@ class Engine(val spark: SparkSession) {
   }
 
   /** Delete generation dirs no manifest in the retention window references,
-    * and manifest files older than the newest (recovery needs only that). */
+    * and manifest files older than the newest (recovery needs only that);
+    * drop the file records of leaves no such manifest serves. One listing
+    * of the view directory per trigger. */
   private def gcIncView(state: IncViewState): Unit = {
     val (fs, dirPath) = hadoopFs(state.dir)
-    val referenced = state.history.flatMap(_.values).flatten
-      .map(leaf => new org.apache.hadoop.fs.Path(leaf).getParent.getName).toSet
-    val newestManifest = fs.listStatus(dirPath)
-      .filter(_.getPath.getName.matches("manifest-g\\d+\\.txt"))
-      .map(_.getPath.getName.stripPrefix("manifest-g").stripSuffix(".txt").toLong)
-      .maxOption
-    fs.listStatus(dirPath).foreach { st =>
+    val leaves = state.history.flatMap(_.values).flatten.toSet
+    state.files = state.files.view.filterKeys(leaves).toMap
+    val referenced = leaves.map(leaf => new Path(leaf).getParent.getName)
+    val entries = fs.listStatus(dirPath)
+    def genOf(n: String) =
+      n.replaceAll("^(manifest|zones)-g", "").stripSuffix(".txt").toLong
+    val newestManifest = entries.map(_.getPath.getName)
+      .filter(_.matches("manifest-g\\d+\\.txt")).map(genOf).maxOption
+    entries.foreach { st =>
       val n = st.getPath.getName
       if (st.isDirectory && n.matches("g\\d+(-r\\d+)?(-c)?") && !referenced.contains(n))
         fs.delete(st.getPath, true)
       else if (n.matches("(manifest|zones)-g\\d+\\.txt") &&
-          newestManifest.exists(_ > n.replaceAll("^(manifest|zones)-g", "")
-            .stripSuffix(".txt").toLong))
+          newestManifest.exists(_ > genOf(n)))
         fs.delete(st.getPath, false)
     }
   }
@@ -1293,22 +1346,15 @@ class Engine(val spark: SparkSession) {
         // resolved from the manifest at CALL time: each pull (and each
         // re-planned batch over it) sees the current generation set; a
         // pinned plan gets viewRetain generations of grace before GC
-        val paths =
-          if (state.deltaLog) servingChains(state, where).flatten
-          else state.manifest.values.flatten.toSeq
-        if (paths.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], state.schema)
-            .where(where)
-        else if (state.deltaLog)
+        if (state.deltaLog)
           // base + deltas: last-writer-wins per key, THEN the predicate —
           // key predicates push through the window partition into parquet,
           // value predicates apply post-resolution but have already pruned
           // whole bucket chains above (servingChains/ZoneMap)
-          resolveLatest(
-            spark.read.schema(deltaSchema(state.schema)).parquet(paths: _*),
-            state.keys)
+          resolveLatest(readLeaves(state, deltaSchema(state.schema),
+              servingChains(state, where).flatten), state.keys)
             .drop("graft_gen").where(state.live).where(where)
-        else spark.read.schema(state.schema).parquet(paths: _*)
+        else readLeaves(state, state.schema, state.manifest.values.flatten.toSeq)
           .where(state.live).where(where)
       case None => views.get(view) match {
         case Some(state) => state.snapshot match {
@@ -1330,4 +1376,18 @@ class Engine(val spark: SparkSession) {
     import scala.jdk.CollectionConverters._
     pull(view, where).limit(limit).toLocalIterator().asScala
   }
+}
+
+/** A file index over files whose statuses are already known (recorded when
+  * they were written): planning a scan over it lists nothing and launches
+  * no listing job, whatever the number of directories the files sit in. */
+private final class KnownFiles(files: Seq[FileStatus]) extends FileIndex {
+  override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
 }

@@ -84,6 +84,65 @@ class IncrementalViewSpec extends SparkSpec {
     e.dropStream("ivs")
   }
 
+  /** Parquet data files directly under a leaf directory. */
+  private def parquetFiles(leaf: String): Seq[String] =
+    new java.io.File(new java.net.URI(leaf).getPath).listFiles().toSeq
+      .map(_.getName).filter(_.endsWith(".parquet"))
+
+  test("every leaf holds one parquet file: whole-bucket triggers, delta-log triggers and compactions") {
+    val e = new Engine(spark)
+    e.createStream("ofs", schema)
+    val plan = e.df("ofs").groupBy(col("k")).agg(sum(col("v")).as("total"))
+    // 5 buckets over the suite's 4 shuffle partitions: a bucket's keys come
+    // from several partitions (with aligned counts each partition would
+    // hold whole buckets), and later triggers update half the keys, so a
+    // rewritten bucket merges kept rows with new ones
+    e.createViewIncremental("ofw", plan, keys = Seq("k"), buckets = 5)
+    e.createViewIncremental("ofd", plan, keys = Seq("k"), buckets = 5,
+      deltaLog = true, compactThreshold = 2)
+    val keys = (1 to 24).map(i => s"k$i")
+    var compacted = false
+    (1 to 3).foreach { t =>
+      val touched = if (t == 1) keys else keys.take(12)
+      e.insert("ofs", touched.map(k => rec(k, t, s"2024-01-01 00:00:0$t")): _*)
+      e.processAll()
+      val leaves = e.viewManifest("ofw").values ++
+        e.viewManifestPaths("ofd").values.flatten
+      leaves.foreach(leaf => assert(parquetFiles(leaf).size == 1,
+        s"trigger $t: $leaf holds ${parquetFiles(leaf)}"))
+      compacted ||= e.viewManifestPaths("ofd").values.flatten.exists(_.contains("-c/"))
+    }
+    assert(compacted, "no compaction ran")
+    val want = keys.map(k => k -> (if (keys.indexOf(k) < 12) 6L else 1L)).toMap
+    Seq("ofw", "ofd").foreach(v => assert(
+      e.pull(v).collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want, v))
+    e.terminate("ofw"); e.terminate("ofd")
+    e.dropStream("ofs")
+  }
+
+  test("a pull over a view serving more than 32 buckets plans without a Spark job") {
+    val e = new Engine(spark)
+    e.createStream("wbs", schema)
+    val plan = e.df("wbs").groupBy(col("k")).agg(sum(col("v")).as("total"))
+    e.createViewIncremental("wbw", plan, keys = Seq("k"))
+    e.createViewIncremental("wbd", plan, keys = Seq("k"), deltaLog = true)
+    val records = (1 to 300).map(i => rec(s"k${i % 150}", i, "2024-01-01 00:00:00"))
+    e.insert("wbs", records: _*)
+    e.processAll()
+    val want = spark.read.schema(schema)
+      .json(spark.createDataset(records)(org.apache.spark.sql.Encoders.STRING))
+      .groupBy(col("k")).agg(sum(col("v")).as("total"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Seq("wbw", "wbd").foreach { v =>
+      assert(e.viewManifest(v).size > 32, s"$v serves ${e.viewManifest(v).size} buckets")
+      var pulled: org.apache.spark.sql.DataFrame = null
+      assert(jobsStartedBy { pulled = e.pull(v, "total > 0") } == 0, v)
+      assert(pulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want, v)
+    }
+    e.terminate("wbw"); e.terminate("wbd")
+    e.dropStream("wbs")
+  }
+
   test("TUMBLE-window view via the dialect maintains incrementally by (key, window_start)") {
     val e = new graft.sql.SqlEngine(spark)
     e.sql("CREATE STREAM wivs (k STRING, v INTEGER, _ts TIMESTAMP);")

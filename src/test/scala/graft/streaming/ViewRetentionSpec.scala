@@ -70,6 +70,29 @@ class ViewRetentionSpec extends SparkSpec {
     e.dropStream("rvs")
   }
 
+  test("building a pull over a retention append view runs no Spark job") {
+    val e = new Engine(spark)
+    e.createStream("rjs", schema)
+    val plan = StreamOps.session(e.df("rjs"), "_ts", "30 seconds",
+        Seq(col("k")), grace = "1 second")
+      .agg(count(lit(1)).as("c"))
+      .select(col("k"), col("session_window.end").as("window_end"), col("c"))
+    e.createViewAppend("rj", plan,
+      retainOn = Some("window_end"), retention = Some("1 HOUR"))
+    val now = Instant.now()
+    e.insert("rjs", rec("a", 1, ts(now)))
+    e.processAll()
+    e.insert("rjs", rec("flush", 0, ts(now.plusSeconds(600))))
+    e.processAll()
+    // the pull GCs expired partitions and plans its scan: driver-side
+    // listings only, no Spark job until the caller collects
+    var pulled: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { pulled = e.pull("rj") } == 0)
+    assert(pulled.collect().map(_.getString(0)).toSet == Set("a"))
+    e.terminate("rj")
+    e.dropStream("rjs")
+  }
+
   test("incremental view: expired windows vanish from pull; bucket rewrites shed them from files") {
     val e = new Engine(spark)
     e.createStream("ris", schema)
