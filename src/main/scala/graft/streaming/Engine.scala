@@ -5,13 +5,13 @@ import scala.collection.concurrent.TrieMap
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, NumericType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, NumericType, StringType, StructField, StructType}
 
 /** The engine facade: streams, continuous queries, and materialized views —
   * the reference's server surface (SURVEY §3) re-expressed on Structured
@@ -822,25 +822,22 @@ class Engine(val spark: SparkSession) {
       (lit(new java.sql.Timestamp(0L)) + expr(s"INTERVAL $d")).cast("long"))
       .head().getLong(0)
 
-  /** Drop whole expired partition dirs of an append view: a bucket covers
+  /** Drop whole expired partition dirs of the existing log `dir` of an
+    * append view whose buckets are `s` seconds wide: a bucket covers
     * [b·s, (b+1)·s) of the retention column, so it is deletable once its
     * UPPER bound is a full bucket width behind the wall-clock horizon —
     * live readers of the metadata log skip the vanished files
     * (ignoreMissingFiles on the pull read). Runs opportunistically at pull
-    * time; idempotent, O(#partition dirs) listing. */
-  private def gcAppendView(state: AppendViewState): Unit =
-    for (s <- state.bucketSecs) { // one bucket = one retention width
-      val (fs, dirPath) = hadoopFs(state.dir)
-      if (fs.exists(dirPath)) {
-        val horizonBucket = (System.currentTimeMillis() / 1000L - s) / s
-        fs.listStatus(dirPath).foreach { st =>
-          val n = st.getPath.getName
-          if (st.isDirectory && n.startsWith("graft_ret_bucket=") &&
-              n.stripPrefix("graft_ret_bucket=").toLong + 1 <= horizonBucket - 1)
-            fs.delete(st.getPath, true)
-        }
-      }
-    }
+    * time; idempotent, one listing. Returns whether any partition dir
+    * survives. */
+  private def gcAppendView(fs: FileSystem, dir: Path, s: Long): Boolean = {
+    val horizonBucket = (System.currentTimeMillis() / 1000L - s) / s
+    val (expired, live) = fs.listStatus(dir)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graft_ret_bucket="))
+      .partition(_.getPath.getName.stripPrefix("graft_ret_bucket=").toLong + 1 <= horizonBucket - 1)
+    expired.foreach(st => fs.delete(st.getPath, true))
+    live.nonEmpty
+  }
 
   // ---- incremental views (update-mode upsert; the 100× scale path) ---------
 
@@ -855,7 +852,12 @@ class Engine(val spark: SparkSession) {
     * per-trigger delta files since the last compaction. Every leaf holds
     * exactly one parquet file, and reads of leaves go through the data
     * files recorded for them in `files` ([[readLeaves]]), so no pull and no
-    * trigger lists a directory or launches a listing job. */
+    * trigger lists a directory or launches a listing job.
+    *
+    * Every stored row satisfies `graft_bucket = bucketOf`: a row's bucket
+    * is computed from its keys with [[bucketOf]] before any write, and
+    * `graft_bucket` is the leaf it lands in. Reads carry that invariant
+    * into the plan, so a pull that fixes every key reads one bucket. */
   private final class IncViewState(val dir: String, val schema: StructType,
                                    val keys: Seq[String], val buckets: Int,
                                    val deltaLog: Boolean,
@@ -874,6 +876,8 @@ class Engine(val spark: SparkSession) {
       * `zones` follows); trimmed to the history's leaves on GC and rebuilt
       * from the manifest on recovery. */
     @volatile var files: Map[String, Seq[FileStatus]] = Map.empty
+    /** The bucket of a row, from its upsert keys. */
+    def bucketOf: Column = pmod(hash(keys.map(col): _*), lit(buckets))
     /** Retention predicate over served/compacted rows (true = keep);
       * DURATION semantics, same wall-clock form as the stream read path. */
     def live: Column = (retainOn, retention) match {
@@ -929,7 +933,10 @@ class Engine(val spark: SparkSession) {
     * persisted for engine-restart recovery. Unchanged buckets keep serving
     * their old generation's files untouched. Pulls and maintenance reads
     * scan the files recorded when each leaf was written, so they run no
-    * listing job however many buckets they span. `keys` must be output columns
+    * listing job however many buckets they span. A row's bucket is
+    * `pmod(hash(keys), buckets)`; reads state that invariant as a filter
+    * over the `graft_bucket` partition column, so a pull that fixes every
+    * key with an equality reads that key's bucket alone. `keys` must be output columns
     * of `plan` (the upsert identity); `buckets` bounds the per-trigger
     * rewrite granularity — at 100 TB size it so one bucket's parquet fits
     * comfortably in executor memory (e.g. thousands). */
@@ -949,15 +956,13 @@ class Engine(val spark: SparkSession) {
       deltaLog, compactThreshold, retainOn, retention)
     loadManifest(state) // engine-restart recovery: serve last committed state
     incViews(name) = state
-    def bucketOf = pmod(hash(keys.map(col): _*), lit(buckets))
     val q = plan.writeStream
       .outputMode("update")
       .option("checkpointLocation", ckpt(s"incview_$name"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batch.withColumn("graft_bucket", bucketOf).persist()
+        val delta = batch.withColumn("graft_bucket", state.bucketOf).persist()
         try {
-          val affected = delta.select("graft_bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
+          val affected = bucketsIn(delta)
           if (affected.nonEmpty) {
             // Replay safety: after a crash between manifest persist and the
             // checkpoint commit, the replayed batch's manifest may point
@@ -971,7 +976,7 @@ class Engine(val spark: SparkSession) {
             }
             val newManifest =
               if (deltaLog) upsertDeltaLog(state, delta, affected, genDir, batchId)
-              else upsertWholeBucket(state, delta, affected, genDir, bucketOf)
+              else upsertWholeBucket(state, delta, affected, genDir)
             // Maintenance-transaction seam points (ViewFuzz r14): files of
             // this generation are fully written at "post-write" but the
             // serving manifest still points at the previous state; the
@@ -1000,8 +1005,7 @@ class Engine(val spark: SparkSession) {
     * the delta rows. O(changed buckets) writes; pulls are a raw parquet
     * scan with full predicate pushdown. */
   private def upsertWholeBucket(state: IncViewState, delta: DataFrame,
-                                affected: Set[Int], genDir: String,
-                                bucketOf: => Column): Map[Int, List[String]] = {
+                                affected: Set[Int], genDir: String): Map[Int, List[String]] = {
     val current = readLeaves(state, state.schema,
         state.manifest.view.filterKeys(affected).values.flatten.toSeq)
       .where(state.live) // bucket rewrites shed rows past retention
@@ -1011,7 +1015,6 @@ class Engine(val spark: SparkSession) {
       .reduce(_ && _)
     val merged = current
       .join(deltaKeys, antiCond, "left_anti")
-      .withColumn("graft_bucket", bucketOf)
       .unionByName(delta)
     val leaves = affected.map(b => b -> s"$genDir/graft_bucket=$b").toMap
     writeLeaves(state, merged, genDir, leaves.values)
@@ -1031,6 +1034,14 @@ class Engine(val spark: SparkSession) {
     state.files = state.files ++ leaves.map(leaf => leaf -> dataFiles(fs, leaf))
   }
 
+  /** The distinct `graft_bucket` values of `df` in one stage: a set per
+    * partition, unioned on the driver (O(buckets) there, as a collected
+    * distinct is, without the distinct's shuffle stage). */
+  private def bucketsIn(df: DataFrame): Set[Int] =
+    df.select("graft_bucket").rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+      .collect().foldLeft(Set.empty[Int])(_ ++ _)
+
   /** The data files of one leaf directory (hidden `_`/`.` names skipped,
     * as Spark's own file listing does). */
   private def dataFiles(fs: FileSystem, leaf: String): Seq[FileStatus] =
@@ -1038,9 +1049,19 @@ class Engine(val spark: SparkSession) {
       st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
 
   /** A scan over the recorded data files of `leaves` with the given
-    * schema: a parquet relation over a [[KnownFiles]] index, so planning
-    * it lists nothing. The schema is read nullable, as `spark.read` reads
-    * any file source. */
+    * schema plus the partition column `graft_bucket`: a parquet relation
+    * over a [[KnownFiles]] index, so planning it lists nothing. The schema
+    * is read nullable, as `spark.read` reads any file source.
+    *
+    * The scan is filtered by the stored-row invariant
+    * `graft_bucket = pmod(hash(keys), buckets)`. It holds for every stored
+    * row (each write derives `graft_bucket` from the keys with that same
+    * expression, see [[IncViewState.bucketOf]]), so the filter removes
+    * nothing; what it adds is the link from the keys to the partition
+    * column. When a pull fixes every key with an equality, Catalyst's
+    * ConstantPropagation and ConstantFolding rewrite it to
+    * `graft_bucket = <b>`, a partition filter, and the scan reads the one
+    * bucket that can hold the key. */
   private def readLeaves(state: IncViewState, schema: StructType,
                          leaves: Seq[String]): DataFrame = {
     val files = state.files
@@ -1051,10 +1072,11 @@ class Engine(val spark: SparkSession) {
       case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
       case other => other
     }
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      new KnownFiles(leaves.flatMap(files)), new StructType(),
+    val index = KnownFiles(leaves.map(leaf => leaf -> files(leaf)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
       nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat,
       Map.empty)(spark))
+      .where(col("graft_bucket") === state.bucketOf)
   }
 
   /** DELTA-LOG upsert (opt-in; the hot-key refinement): each trigger writes
@@ -1162,9 +1184,7 @@ class Engine(val spark: SparkSession) {
         val merged = resolveLatest(
           readLeaves(state, deltaSchema(state.schema), paths), state.keys)
           .where(state.live) // compaction sheds rows past retention
-          .withColumn("graft_bucket",
-            pmod(hash(state.keys.map(col): _*), lit(state.buckets)))
-          .persist() // read by a distinct, the write and a small zone agg
+          .persist() // read by bucketsIn, the write and a small zone agg
         try {
           // A bucket whose every row EXPIRED compacts to NOTHING — the
           // partitioned write creates no graft_bucket=<b> dir for it, so
@@ -1172,10 +1192,9 @@ class Engine(val spark: SparkSession) {
           // never written (r13 ViewFuzz find: an update to an already-
           // expired key triggered compaction of an all-expired bucket and
           // every later pull died with PATH_NOT_FOUND on the dangling
-          // leaf). One tiny distinct over the persisted frame — the same
-          // driver bound as the affected-set collect.
-          val survivors = merged.select("graft_bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
+          // leaf). One stage over the persisted frame — the same driver
+          // bound as the affected-set collect.
+          val survivors = bucketsIn(merged)
           val leaves = toCompact.filter(survivors)
             .map(b => b -> s"$compactDir/graft_bucket=$b").toMap
           writeLeaves(state, merged, compactDir, leaves.values)
@@ -1302,15 +1321,12 @@ class Engine(val spark: SparkSession) {
         if (!fs.exists(p)) // no session has closed yet: empty, correctly typed
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], state.schema)
             .where(where)
-        else (state.retainOn, state.retention) match {
-          case (Some(c), Some(ret)) =>
-            gcAppendView(state) // opportunistic: expired partitions vanish
-            // GC may have emptied the log entirely (everything expired):
-            // schema inference over a metadata log of vanished files fails,
-            // so serve empty-typed directly
-            val anyLive = fs.listStatus(p).exists(st =>
-              st.isDirectory && st.getPath.getName.startsWith("graft_ret_bucket="))
-            if (!anyLive)
+        else (state.retainOn, state.retention, state.bucketSecs) match {
+          case (Some(c), Some(ret), Some(secs)) =>
+            // opportunistic GC: expired partitions vanish. It may empty the
+            // log entirely (everything expired): schema inference over a
+            // metadata log of vanished files fails, so serve empty-typed
+            if (!gcAppendView(fs, p, secs))
               spark.createDataFrame(spark.sparkContext.emptyRDD[Row], state.schema)
                 .where(where)
             else {
@@ -1329,7 +1345,7 @@ class Engine(val spark: SparkSession) {
                 .option("ignoreMissingFiles", "true")
                 .parquet(state.dir)
                 .where(col("graft_ret_bucket") >=
-                  floor(unix_timestamp(horizon) / state.bucketSecs.get) - 1)
+                  floor(unix_timestamp(horizon) / secs) - 1)
                 .where(col(c) >= horizon)
                 .drop("graft_ret_bucket")
                 .where(where)
@@ -1350,12 +1366,14 @@ class Engine(val spark: SparkSession) {
           // base + deltas: last-writer-wins per key, THEN the predicate —
           // key predicates push through the window partition into parquet,
           // value predicates apply post-resolution but have already pruned
-          // whole bucket chains above (servingChains/ZoneMap)
+          // whole bucket chains above (servingChains/ZoneMap). The bucket
+          // invariant sits below the window, so a key predicate pushed
+          // through it also prunes the read to the key's one chain.
           resolveLatest(readLeaves(state, deltaSchema(state.schema),
               servingChains(state, where).flatten), state.keys)
-            .drop("graft_gen").where(state.live).where(where)
+            .drop("graft_gen", "graft_bucket").where(state.live && expr(where))
         else readLeaves(state, state.schema, state.manifest.values.flatten.toSeq)
-          .where(state.live).where(where)
+          .drop("graft_bucket").where(state.live && expr(where))
       case None => views.get(view) match {
         case Some(state) => state.snapshot match {
           case Some(path) => spark.read.parquet(path).where(where)
@@ -1378,16 +1396,42 @@ class Engine(val spark: SparkSession) {
   }
 }
 
-/** A file index over files whose statuses are already known (recorded when
-  * they were written): planning a scan over it lists nothing and launches
-  * no listing job, whatever the number of directories the files sit in. */
-private final class KnownFiles(files: Seq[FileStatus]) extends FileIndex {
-  override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+/** A file index over view leaves whose data files are already known
+  * (recorded when they were written): one partition per leaf, valued by
+  * the bucket its `graft_bucket=<b>` name carries. Planning a scan over it
+  * lists nothing and launches no listing job, whatever the number of
+  * leaves; partition filters on `graft_bucket` drop the leaves they
+  * cannot match, so a scan whose filters fix the bucket (the stored-row
+  * invariant of [[Engine.readLeaves]] under a key equality) reads one
+  * bucket. */
+private final class KnownFiles(leaves: Seq[PartitionDirectory]) extends FileIndex {
+  override def rootPaths: Seq[Path] =
+    leaves.flatMap(_.files.map(_.getPath.getParent)).distinct
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
-  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    if (partitionFilters.isEmpty) leaves
+    else {
+      // graft_bucket is the only partition column: bind every reference
+      // to it, as Spark's own partition pruning binds by name
+      val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+        case _: AttributeReference => BoundReference(0, IntegerType, nullable = true)
+      })
+      leaves.filter(leaf => keep.eval(leaf.values))
+    }
+  override def inputFiles: Array[String] =
+    leaves.flatMap(_.files.map(_.getPath.toString)).toArray
   override def refresh(): Unit = ()
-  override def sizeInBytes: Long = files.map(_.getLen).sum
-  override def partitionSchema: StructType = new StructType()
+  override def sizeInBytes: Long = leaves.flatMap(_.files.map(_.getLen)).sum
+  override def partitionSchema: StructType = KnownFiles.partitionSchema
+}
+
+private object KnownFiles {
+  val partitionSchema: StructType = StructType(Seq(StructField("graft_bucket", IntegerType)))
+
+  /** An index over `(leaf path, its data files)` pairs. */
+  def apply(leaves: Seq[(String, Seq[FileStatus])]): KnownFiles =
+    new KnownFiles(leaves.map { case (leaf, files) =>
+      val bucket = new Path(leaf).getName.stripPrefix("graft_bucket=").toInt
+      PartitionDirectory(InternalRow(bucket), files.toArray)
+    })
 }

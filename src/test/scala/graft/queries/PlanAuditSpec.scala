@@ -70,4 +70,39 @@ class PlanAuditSpec extends SparkSpec {
         s"${ev.relation.dataSchema.size} columns")
     spark.catalog.clearCache()
   }
+
+  test("a dialect key pull on an incremental view scans one bucket: a literal graft_bucket partition filter") {
+    // Pins the bucket pruning of view pulls (Engine.readLeaves): under the
+    // pull's key equality, the stored-row invariant
+    // graft_bucket = pmod(hash(keys), buckets) must fold to a literal
+    // partition filter on the executed scan. If Catalyst stops propagating
+    // the dialect's null-safe `=` into it, this fails instead of every key
+    // pull silently reading all buckets again.
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
+    val e = new graft.sql.SqlEngine(spark)
+    e.sql("CREATE STREAM pas (user_id INTEGER, value FLOAT, _ts TIMESTAMP);")
+    e.sql("CREATE VIEW pav AS SELECT user_id, COUNT(*) AS c, SUM(value) AS s " +
+      "FROM pas GROUP BY user_id;")
+    (1 to 20).foreach(u => e.sql(
+      s"INSERT INTO pas (user_id, value, _ts) VALUES ($u, 1.5, '2024-01-01 00:00:00');"))
+    e.engine.processAll()
+    val pulled = e.batch("SELECT user_id, c, s FROM pav WHERE user_id = 17;")
+    assert(pulled.collect().map(_.get(0).toString).toSeq == Seq("17"))
+    val keyType = pulled.schema("user_id").dataType
+    val bucket = spark.range(1)
+      .select(pmod(hash(lit(17).cast(keyType)), lit(64))).head().getInt(0)
+    object plans extends AdaptiveSparkPlanHelper
+    val filters = plans.collect(pulled.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.partitionFilters }.flatten
+    assert(filters.exists {
+      case EqualTo(a: AttributeReference, Literal(b, _)) =>
+        a.name == "graft_bucket" && b == bucket
+      case _ => false
+    }, s"no graft_bucket = $bucket partition filter: $filters")
+    e.sql("DROP VIEW pav;")
+    e.sql("DROP STREAM pas;")
+  }
 }

@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
+import IncrementalViewSpec.{bucketOf, scannedLeaves}
 
 /** Incremental view maintenance (the reference maintains view state
   * incrementally and serves pulls from it — hstream/src/HStream/Server/
@@ -84,6 +88,37 @@ class IncrementalViewSpec extends SparkSpec {
     e.dropStream("ivs")
   }
 
+  test("a key-equality pull scans exactly one leaf: whole-bucket and delta-log mode") {
+    val e = new Engine(spark)
+    e.createStream("kps", schema)
+    val plan = e.df("kps").groupBy(col("k")).agg(sum(col("v")).as("total"))
+    e.createViewIncremental("kpw", plan, keys = Seq("k"), buckets = 16)
+    e.createViewIncremental("kpd", plan, keys = Seq("k"), buckets = 16, deltaLog = true)
+    val keys = (1 to 40).map(i => s"k$i")
+    e.insert("kps", keys.map(k => rec(k, 1, "2024-01-01 00:00:00")): _*)
+    e.processAll()
+    val b7 = bucketOf(spark, 16, lit("k7"))
+    def check(v: String, total: Long, leaves: Int): Unit = {
+      val served = e.viewManifestPaths(v).values.flatten.size
+      assert(e.viewManifestPaths(v)(b7).size == leaves, s"$v: ${e.viewManifestPaths(v)(b7)}")
+      assert(scannedLeaves(e.pull(v, "k = 'k7'")) == (Set(b7), leaves),
+        s"$v: a key pull should read bucket $b7 only, of $served leaves")
+      assert(e.pull(v, "k = 'k7'").collect().map(r => r.getString(0) -> r.getLong(1))
+        .toSeq == Seq("k7" -> total), v)
+      // a pull that fixes no key reads every leaf
+      assert(scannedLeaves(e.pull(v, "total > 0"))._2 == served, v)
+    }
+    Seq("kpw", "kpd").foreach(v => check(v, 1L, leaves = 1))
+    // a second trigger: the whole-bucket leaf is rewritten, the delta-log
+    // chain grows to base + delta, and the key pull reads that chain alone
+    e.insert("kps", rec("k7", 5, "2024-01-01 00:00:01"))
+    e.processAll()
+    check("kpw", 6L, leaves = 1)
+    check("kpd", 6L, leaves = 2)
+    e.terminate("kpw"); e.terminate("kpd")
+    e.dropStream("kps")
+  }
+
   /** Parquet data files directly under a leaf directory. */
   private def parquetFiles(leaf: String): Seq[String] =
     new java.io.File(new java.net.URI(leaf).getPath).listFiles().toSeq
@@ -138,6 +173,12 @@ class IncrementalViewSpec extends SparkSpec {
       var pulled: org.apache.spark.sql.DataFrame = null
       assert(jobsStartedBy { pulled = e.pull(v, "total > 0") } == 0, v)
       assert(pulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want, v)
+      // a key pull plans without a job too, and reads the key's bucket alone
+      var keyPulled: org.apache.spark.sql.DataFrame = null
+      assert(jobsStartedBy { keyPulled = e.pull(v, "k = 'k7'") } == 0, v)
+      assert(scannedLeaves(keyPulled) == (Set(bucketOf(spark, 64, lit("k7"))), 1L), v)
+      assert(keyPulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        want.view.filterKeys(_ == "k7").toMap, v)
     }
     e.terminate("wbw"); e.terminate("wbd")
     e.dropStream("wbs")
@@ -548,4 +589,22 @@ class IncrementalViewSpec extends SparkSpec {
       r.getString(0) -> r.getLong(1)).toMap == Map("a" -> 20L))
     e.terminate("pout"); e.terminate("p2"); e.terminate("p3")
   }
+}
+
+object IncrementalViewSpec {
+  /** The buckets and the number of leaves (one parquet file each) that
+    * the one parquet scan of `df` selected when it ran. */
+  def scannedLeaves(df: DataFrame): (Set[Int], Long) = {
+    df.collect()
+    object plans extends AdaptiveSparkPlanHelper
+    val scans = plans.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.selectedPartitions }
+    assert(scans.size == 1, s"expected one scan:\n${df.queryExecution.executedPlan}")
+    (scans.head.filePartitionIterator.map(_.values.getInt(0)).toSet,
+      scans.head.totalNumberOfFiles)
+  }
+
+  /** The bucket of a row with these key values, among `n` buckets. */
+  def bucketOf(spark: SparkSession, n: Int, keys: Column*): Int =
+    spark.range(1).select(pmod(hash(keys: _*), lit(n))).head().getInt(0)
 }
