@@ -167,9 +167,9 @@ object SignatureStore {
     * write-then-rename protocol as append — a crash leaves the old
     * manifest serving the old leaves. Old leaf dirs become orphans; they
     * are NOT deleted here because a reader holding the previous manifest
-    * may still be scanning them — vacuum them once quiesced (same
-    * trade-off as the view delta-log compaction). Single writer, like
-    * append. Returns the number of leaves folded (0 = nothing to do). */
+    * may still be scanning them — vacuum them once quiesced. Single
+    * writer, like append. Returns the number of leaves folded (0 =
+    * nothing to do). */
   def compact(spark: SparkSession, dir: String): Int = {
     val (gen, entries) = committedWithGen(spark, dir)
     val leaves = entries.values.toSeq.distinct.sorted

@@ -190,16 +190,8 @@ class SqlEngine(spark: SparkSession) {
         sel.groupBy.map(_.name).forall(keyOutputs.contains) &&
         keys.nonEmpty && keys.forall(plan.columns.contains)
       Started(
+        // each trigger rewrites the view's changed buckets whole
         if (incremental) engine.createViewIncremental(name, plan, keys,
-          // hot-key refinement opt-in (documented at Engine.upsertDeltaLog):
-          // per-trigger delta files + threshold compaction instead of
-          // whole-bucket rewrites — for views where a few keys update
-          // every trigger and pulls filter on keys, not aggregate values
-          deltaLog =
-            spark.conf.getOption("spark.graft.viewDeltaLog").contains("true"),
-          compactThreshold =
-            spark.conf.getOption("spark.graft.viewDeltaCompactThreshold")
-              .map(_.toInt).getOrElse(8),
           retainOn = retainOn, retention = retention)
         else engine.createView(name, plan))
     case InsertValues(stream, cols, vals) =>

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, NumericType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 
 /** The engine facade: streams, continuous queries, and materialized views —
   * the reference's server surface (SURVEY §3) re-expressed on Structured
@@ -842,17 +842,15 @@ class Engine(val spark: SparkSession) {
   // ---- incremental views (update-mode upsert; the 100× scale path) ---------
 
   /** view name → (dir, output schema, upsert keys, bucket count, serving
-    * manifest bucket→paths). The manifest flips atomically after each batch's
+    * manifest bucket→leaf). The manifest flips atomically after each batch's
     * distributed write; history retains recent manifests so pinned readers
     * get a grace window (viewRetain generations).
     *
-    * A bucket maps to a LIST of leaf paths: in the default whole-bucket
-    * upsert mode the list is always one element (the bucket's current
-    * generation); in delta-log mode it is the compacted base plus the
-    * per-trigger delta files since the last compaction. Every leaf holds
-    * exactly one parquet file, and reads of leaves go through the data
-    * files recorded for them in `files` ([[readLeaves]]), so no pull and no
-    * trigger lists a directory or launches a listing job.
+    * A bucket maps to ONE leaf path: the generation that last rewrote the
+    * bucket whole. Every leaf holds exactly one parquet file, and reads of
+    * leaves go through the data files recorded for them in `files`
+    * ([[readLeaves]]), so no pull and no trigger lists a directory or
+    * launches a listing job.
     *
     * Every stored row satisfies `graft_bucket = bucketOf`: a row's bucket
     * is computed from its keys with [[bucketOf]] before any write, and
@@ -860,25 +858,18 @@ class Engine(val spark: SparkSession) {
     * into the plan, so a pull that fixes every key reads one bucket. */
   private final class IncViewState(val dir: String, val schema: StructType,
                                    val keys: Seq[String], val buckets: Int,
-                                   val deltaLog: Boolean,
-                                   val compactThreshold: Int,
                                    val retainOn: Option[String],
                                    val retention: Option[String]) {
-    @volatile var manifest: Map[Int, List[String]] = Map.empty
-    @volatile var history: List[Map[Int, List[String]]] = Nil
-    /** DELTA-LOG zone maps: leaf path → numeric column → (min, max).
-      * Assigned BEFORE the manifest flips, so every served path has its
-      * zones visible to pulls; trimmed to the serving manifest's paths on
-      * persist (history readers never prune). See [[ZoneMap]]. */
-    @volatile var zones: ZoneMap.Zones = Map.empty
+    @volatile var manifest: Map[Int, String] = Map.empty
+    @volatile var history: List[Map[Int, String]] = Nil
     /** Leaf path → its data files, listed once right after the leaf is
-      * written and assigned BEFORE the manifest serving it flips (the rule
-      * `zones` follows); trimmed to the history's leaves on GC and rebuilt
-      * from the manifest on recovery. */
+      * written and assigned BEFORE the manifest serving it flips; trimmed
+      * to the history's leaves on GC and rebuilt from the manifest on
+      * recovery. */
     @volatile var files: Map[String, Seq[FileStatus]] = Map.empty
     /** The bucket of a row, from its upsert keys. */
     def bucketOf: Column = pmod(hash(keys.map(col): _*), lit(buckets))
-    /** Retention predicate over served/compacted rows (true = keep);
+    /** Retention predicate over served/rewritten rows (true = keep);
       * DURATION semantics, same wall-clock form as the stream read path. */
     def live: Column = (retainOn, retention) match {
       case (Some(c), Some(d)) =>
@@ -896,27 +887,8 @@ class Engine(val spark: SparkSession) {
     * before GC. Production default is a no-op; the view fuzzer injects
     * pulls here to certify that a pull landing inside each window serves
     * one CONSISTENT snapshot (pre-batch state before the flip, post-batch
-    * state after), including mid-compaction. */
+    * state after), including while a served bucket is being rewritten. */
   private[graft] var incViewSeam: (String, String) => Unit = (_, _) => ()
-
-  /** On-disk row schema of a DELTA-LOG incremental view: the view schema
-    * plus the writing trigger's generation — last-writer-wins resolution
-    * orders on it (update mode emits at most one row per key per trigger,
-    * so (key, max graft_gen) is the current aggregate). */
-  private def deltaSchema(s: StructType): StructType =
-    StructType(s.fields :+ StructField("graft_gen", LongType))
-
-  /** Keep the newest row per upsert key across base + delta files. A window
-    * partition (unlike join equality) groups NULL keys together, so null
-    * group keys resolve in place with no special casing. Replay ties (two
-    * persisted copies of one replayed trigger share a generation) carry
-    * identical rows, so the arbitrary tiebreak cannot change the result. */
-  private def resolveLatest(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(col("graft_gen").desc)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-  }
 
   /** CREATE VIEW with INCREMENTAL maintenance: the aggregation runs in
     * UPDATE mode, so each trigger carries only the keys whose aggregates
@@ -941,20 +913,18 @@ class Engine(val spark: SparkSession) {
     * rewrite granularity — at 100 TB size it so one bucket's parquet fits
     * comfortably in executor memory (e.g. thousands). */
   def createViewIncremental(name: String, plan: DataFrame, keys: Seq[String],
-                            buckets: Int = 64, deltaLog: Boolean = false,
-                            compactThreshold: Int = 8,
+                            buckets: Int = 64,
                             retainOn: Option[String] = None,
                             retention: Option[String] = None): StreamingQuery = {
     require(keys.nonEmpty && keys.forall(plan.schema.fieldNames.contains),
       s"upsert keys $keys must be output columns of the view plan")
-    require(compactThreshold >= 1, s"compactThreshold must be >= 1")
     require(retention.isEmpty == retainOn.isEmpty,
       "retention and retainOn must be set together")
     retainOn.foreach(c => require(plan.schema.fieldNames.contains(c),
       s"retention column $c must be an output column of the view plan"))
     val state = new IncViewState(s"$viewRoot/$name", plan.schema, keys, buckets,
-      deltaLog, compactThreshold, retainOn, retention)
-    loadManifest(state) // engine-restart recovery: serve last committed state
+      retainOn, retention)
+    loadManifest(name, state) // engine-restart recovery: serve last committed state
     incViews(name) = state
     val q = plan.writeStream
       .outputMode("update")
@@ -974,9 +944,7 @@ class Engine(val spark: SparkSession) {
             while (gfs.exists(new org.apache.hadoop.fs.Path(genDir))) {
               attempt += 1; genDir = s"${state.dir}/g$batchId-r$attempt"
             }
-            val newManifest =
-              if (deltaLog) upsertDeltaLog(state, delta, affected, genDir, batchId)
-              else upsertWholeBucket(state, delta, affected, genDir)
+            val newManifest = upsertWholeBucket(state, delta, affected, genDir)
             // Maintenance-transaction seam points (ViewFuzz r14): files of
             // this generation are fully written at "post-write" but the
             // serving manifest still points at the previous state; the
@@ -998,16 +966,16 @@ class Engine(val spark: SparkSession) {
     q
   }
 
-  /** Default upsert: rewrite each affected bucket whole — unchanged rows of
+  /** The upsert: rewrite each affected bucket whole — unchanged rows of
     * the bucket (null-safe anti-join against the delta keys: a null group
     * key's old row must be replaced too, since k = k is NULL for nulls and
     * a plain anti-join would keep appending one stale row per trigger) plus
     * the delta rows. O(changed buckets) writes; pulls are a raw parquet
     * scan with full predicate pushdown. */
   private def upsertWholeBucket(state: IncViewState, delta: DataFrame,
-                                affected: Set[Int], genDir: String): Map[Int, List[String]] = {
-    val current = readLeaves(state, state.schema,
-        state.manifest.view.filterKeys(affected).values.flatten.toSeq)
+                                affected: Set[Int], genDir: String): Map[Int, String] = {
+    val current = readLeaves(state,
+        state.manifest.view.filterKeys(affected).values.toSeq)
       .where(state.live) // bucket rewrites shed rows past retention
     val deltaKeys = delta.select(state.keys.map(col): _*).alias("__dk")
     val antiCond = state.keys.map(k =>
@@ -1020,7 +988,7 @@ class Engine(val spark: SparkSession) {
     writeLeaves(state, merged, genDir, leaves.values)
     // returned, not assigned: the caller flips the serving manifest at its
     // seam-instrumented visibility point (createViewIncremental)
-    state.manifest ++ leaves.map { case (b, leaf) => b -> List(leaf) }
+    state.manifest ++ leaves
   }
 
   /** Write `df` (which carries graft_bucket) under `dir` as ONE parquet
@@ -1048,10 +1016,10 @@ class Engine(val spark: SparkSession) {
     fs.listStatus(new Path(leaf)).toSeq.filterNot(st =>
       st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
 
-  /** A scan over the recorded data files of `leaves` with the given
-    * schema plus the partition column `graft_bucket`: a parquet relation
-    * over a [[KnownFiles]] index, so planning it lists nothing. The schema
-    * is read nullable, as `spark.read` reads any file source.
+  /** A scan over the recorded data files of `leaves` with the view schema
+    * plus the partition column `graft_bucket`: a parquet relation over a
+    * [[KnownFiles]] index, so planning it lists nothing. The schema is read
+    * nullable, as `spark.read` reads any file source.
     *
     * The scan is filtered by the stored-row invariant
     * `graft_bucket = pmod(hash(keys), buckets)`. It holds for every stored
@@ -1062,8 +1030,7 @@ class Engine(val spark: SparkSession) {
     * ConstantPropagation and ConstantFolding rewrite it to
     * `graft_bucket = <b>`, a partition filter, and the scan reads the one
     * bucket that can hold the key. */
-  private def readLeaves(state: IncViewState, schema: StructType,
-                         leaves: Seq[String]): DataFrame = {
+  private def readLeaves(state: IncViewState, leaves: Seq[String]): DataFrame = {
     val files = state.files
     def nullable(t: DataType): DataType = t match {
       case s: StructType => StructType(s.fields.map(f =>
@@ -1074,156 +1041,23 @@ class Engine(val spark: SparkSession) {
     }
     val index = KnownFiles(leaves.map(leaf => leaf -> files(leaf)))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat,
+      nullable(state.schema).asInstanceOf[StructType], None, new ParquetFileFormat,
       Map.empty)(spark))
       .where(col("graft_bucket") === state.bucketOf)
   }
 
-  /** DELTA-LOG upsert (opt-in; the hot-key refinement): each trigger writes
-    * ONLY the changed rows — O(delta), not O(changed buckets) — stamped
-    * with a generation column; serving resolves last-writer-wins per key
-    * ([[resolveLatest]]). When a bucket accumulates more than
-    * `compactThreshold` files, that bucket (alone) is compacted back to a
-    * single base file in the same distributed write. Steady state per
-    * bucket: one base + at most threshold deltas, so a hot key costs one
-    * small file per trigger instead of a whole-bucket rewrite.
-    *
-    * Trade-off vs whole-bucket mode (why this is opt-in): pulls insert a
-    * per-key window above the scan, so only KEY predicates prune the
-    * parquet read row-wise — a value predicate (e.g. total > 4) must
-    * logically apply after resolution (a stale generation's row could pass
-    * it while the current one fails) and cannot push into the reader. What
-    * value predicates DO get is bucket-level zone pruning: each write
-    * records per-leaf min/max of the numeric output columns, and a pull
-    * skips every bucket whose whole chain's range cannot satisfy the
-    * predicate ([[ZoneMap]] — sound at chain granularity because every
-    * resolved row is a stored chain row). Views with high key churn and
-    * heavily value-filtered pulls may still prefer whole-bucket mode. */
-  /** The zone-mapped output columns of a view: name → isString. Numeric
-    * columns prune with BigDecimal ranges, string columns with UTF-8
-    * binary ranges (Spark's own string order — see ZoneMap.utf8Cmp). */
-  private def zonedCols(s: StructType): Map[String, Boolean] =
-    s.fields.collect {
-      case f if f.dataType.isInstanceOf[NumericType] => f.name -> false
-      case f if f.dataType == org.apache.spark.sql.types.StringType =>
-        f.name -> true
-    }.toMap
-
-  /** Per-bucket min/max of the zoned output columns of `df` (which must
-    * carry graft_bucket), keyed by the leaf path each bucket was written
-    * to. One small agg over an already-persisted frame, O(affected
-    * buckets) on the driver — same bound as the affected-set collect.
-    * NaN/±Inf numeric extremes yield no zone for that column (unprunable,
-    * sound); min/max ignore nulls, so an all-null column likewise goes
-    * unzoned; a string extreme the tab-separated sidecar cannot hold
-    * (embedded tab/newline) also goes unzoned rather than corrupt the
-    * persisted format. */
-  private def collectZones(df: DataFrame, cols: Map[String, Boolean],
-                           pathOf: Int => String): ZoneMap.Zones =
-    if (cols.isEmpty) Map.empty
-    else {
-      val names = cols.keys.toSeq
-      val aggs = names.flatMap(c =>
-        Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-      def sidecarSafe(s: String): Boolean = !s.exists(ch => ch == '\t' || ch == '\n' || ch == '\r')
-      df.groupBy(col("graft_bucket")).agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val colZones = names.flatMap { c =>
-            (Option(r.getAs[Any](s"__mn_$c")), Option(r.getAs[Any](s"__mx_$c"))) match {
-              case (Some(mn), Some(mx)) if cols(c) =>
-                val (s1, s2) = (mn.toString, mx.toString)
-                if (sidecarSafe(s1) && sidecarSafe(s2)) Some(c -> (s1, s2))
-                else None
-              case (Some(mn), Some(mx)) => scala.util.Try(
-                c -> (BigDecimal(mn.toString).toString,
-                      BigDecimal(mx.toString).toString)).toOption
-              case _ => None
-            }
-          }.toMap
-          pathOf(r.getInt(0)) -> colZones
-        }.toMap
-    }
-
-  /** The delta chains a pull with `where` must read, after bucket-level
-    * zone pruning. Pulls with no prunable conjunct serve every chain. */
-  private def servingChains(state: IncViewState, where: String): Seq[List[String]] = {
-    val bnds = ZoneMap.bounds(spark, where, zonedCols(state.schema))
-    if (bnds.isEmpty) state.manifest.values.toSeq
-    else state.manifest.values.filter(ch =>
-      ZoneMap.mayMatch(ch, bnds, state.zones)).toSeq
-  }
-
-  /** Post-pruning serving paths of a delta-log view (tests/diagnostics):
-    * asserts that zone pruning actually engages for a given predicate. */
-  private[graft] def viewServingPaths(name: String, where: String): Seq[String] =
-    servingChains(incViews(name), where).flatten
-
-  private def upsertDeltaLog(state: IncViewState, delta: DataFrame,
-                             affected: Set[Int], genDir: String,
-                             gen: Long): Map[Int, List[String]] = {
-    writeLeaves(state, delta.withColumn("graft_gen", lit(gen)), genDir,
-      affected.map(b => s"$genDir/graft_bucket=$b"))
-    val zc = zonedCols(state.schema)
-    // zones flip before the manifest below: a pull racing this trigger
-    // either sees the old manifest (old zones suffice) or the new one
-    // (whose new paths are already zoned)
-    state.zones = state.zones ++
-      collectZones(delta, zc, b => s"$genDir/graft_bucket=$b")
-    val withDeltas = state.manifest ++ affected.map(b =>
-      b -> (state.manifest.getOrElse(b, Nil) :+ s"$genDir/graft_bucket=$b"))
-    val toCompact = affected.filter(b =>
-      withDeltas(b).size > state.compactThreshold)
-    // returned, not assigned (see upsertWholeBucket)
-    if (toCompact.isEmpty) withDeltas
-    else {
-        // one distributed write compacts ALL over-threshold buckets: read
-        // their base+deltas, keep the newest row per key (generations
-        // survive compaction, so later deltas still win over the base)
-        val compactDir = s"$genDir-c"
-        val paths = toCompact.toSeq.flatMap(withDeltas)
-        val merged = resolveLatest(
-          readLeaves(state, deltaSchema(state.schema), paths), state.keys)
-          .where(state.live) // compaction sheds rows past retention
-          .persist() // read by bucketsIn, the write and a small zone agg
-        try {
-          // A bucket whose every row EXPIRED compacts to NOTHING — the
-          // partitioned write creates no graft_bucket=<b> dir for it, so
-          // the manifest must record an EMPTY chain, not a path that was
-          // never written (r13 ViewFuzz find: an update to an already-
-          // expired key triggered compaction of an all-expired bucket and
-          // every later pull died with PATH_NOT_FOUND on the dangling
-          // leaf). One stage over the persisted frame — the same driver
-          // bound as the affected-set collect.
-          val survivors = bucketsIn(merged)
-          val leaves = toCompact.filter(survivors)
-            .map(b => b -> s"$compactDir/graft_bucket=$b").toMap
-          writeLeaves(state, merged, compactDir, leaves.values)
-          // fresh (not union-merged) zones: compaction sheds superseded and
-          // expired rows, so the compacted base's ranges tighten
-          state.zones = state.zones ++
-            collectZones(merged, zc, b => s"$compactDir/graft_bucket=$b")
-          withDeltas ++ toCompact.map(b => b -> leaves.get(b).toList)
-        } finally merged.unpersist()
-      }
-  }
-
   /** The serving manifest of an incremental view (tests/diagnostics):
-    * bucket → current single leaf (whole-bucket mode semantics). */
+    * bucket → the one leaf that serves it. */
   private[graft] def viewManifest(name: String): Map[Int, String] =
-    incViews(name).manifest.map { case (b, ps) => b -> ps.head }
-
-  /** Full manifest including delta chains (delta-log mode diagnostics). */
-  private[graft] def viewManifestPaths(name: String): Map[Int, List[String]] =
     incViews(name).manifest
 
   private def persistManifest(state: IncViewState, gen: Long): Unit = {
     val (fs, _) = hadoopFs(state.dir)
     val tmp = new org.apache.hadoop.fs.Path(s"${state.dir}/manifest-g$gen.tmp")
     val out = fs.create(tmp, true)
-    // one line per bucket: bucket \t path [\t path …] — whole-bucket mode
-    // writes one path, delta-log mode the base-then-deltas chain in order
+    // one line per bucket: bucket \t leaf path
     try out.write(state.manifest.toSeq.sortBy(_._1)
-      .map { case (b, ps) => (b.toString +: ps).mkString("\t") }
+      .map { case (b, leaf) => s"$b\t$leaf" }
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
     val dst = new org.apache.hadoop.fs.Path(s"${state.dir}/manifest-g$gen.txt")
@@ -1231,30 +1065,16 @@ class Engine(val spark: SparkSession) {
     // an existing path fails (local FS silently succeeds) — delete first
     if (fs.exists(dst)) fs.delete(dst, false)
     fs.rename(tmp, dst)
-    if (state.deltaLog) persistZones(state, gen, fs)
   }
 
-  /** Zones sidecar next to each manifest generation (same atomic dance):
-    * one line per (leaf, column): path \t col \t min \t max. Trimmed to
-    * the serving manifest's paths — older generations never prune. A
-    * missing sidecar at recovery just means no pruning until the next
-    * write ([[ZoneMap.mayMatch]] treats unknown ranges as satisfiable). */
-  private def persistZones(state: IncViewState, gen: Long,
-                           fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val serving = state.manifest.values.flatten.toSet
-    state.zones = state.zones.view.filterKeys(serving).toMap
-    val tmp = new org.apache.hadoop.fs.Path(s"${state.dir}/zones-g$gen.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(state.zones.toSeq.sortBy(_._1).flatMap { case (p, cz) =>
-      cz.toSeq.sortBy(_._1).map { case (c, (mn, mx)) => s"$p\t$c\t$mn\t$mx" }
-    }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"${state.dir}/zones-g$gen.txt")
-    if (fs.exists(dst)) fs.delete(dst, false)
-    fs.rename(tmp, dst)
-  }
-
-  private def loadManifest(state: IncViewState): Unit = {
+  /** Recover the newest persisted manifest of view `name`. A line naming
+    * more than one leaf is a chain of the removed delta-log storage, whose
+    * files hold superseded rows per key: serving it as whole buckets would
+    * answer wrongly, so recovery refuses it. A one-leaf line of that
+    * storage (a first delta or a compacted base) holds one row per key and
+    * recovers like any whole-bucket leaf. Other files in the directory
+    * (such as that storage's `zones-g*.txt`) are not read. */
+  private def loadManifest(name: String, state: IncViewState): Unit = {
     val (fs, dirPath) = hadoopFs(state.dir)
     if (!fs.exists(dirPath)) return
     val manifests = fs.listStatus(dirPath)
@@ -1264,23 +1084,16 @@ class Engine(val spark: SparkSession) {
       val in = fs.open(st.getPath)
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       state.manifest = text.linesIterator.filter(_.contains('\t')).map { line =>
-        val parts = line.split("\t").toList
-        parts.head.toInt -> parts.tail
+        line.split("\t") match {
+          case Array(b, leaf) => b.toInt -> leaf
+          case _ => throw new IllegalStateException(
+            s"incremental view $name: ${st.getPath} serves bucket " +
+              s"${line.takeWhile(_ != '\t')} from several leaves, a chain of " +
+              "the delta-log view storage, which was removed; recreate the view")
+        }
       }.toMap
       state.history = List(state.manifest)
-      state.files = state.manifest.values.flatten.map(leaf =>
-        leaf -> dataFiles(fs, leaf)).toMap
-      val gen = st.getPath.getName.stripPrefix("manifest-g").stripSuffix(".txt")
-      val zpath = new org.apache.hadoop.fs.Path(s"${state.dir}/zones-g$gen.txt")
-      if (fs.exists(zpath)) {
-        val zin = fs.open(zpath)
-        val ztext = try scala.io.Source.fromInputStream(zin, "UTF-8").mkString finally zin.close()
-        state.zones = ztext.linesIterator.map(_.split("\t"))
-          .collect { case Array(p, c, mn, mx) => (p, c, mn, mx) }.toSeq
-          .groupBy(_._1)
-          .map { case (p, rows) =>
-            p -> rows.map(r => r._2 -> (r._3, r._4)).toMap }
-      }
+      state.files = state.manifest.values.map(leaf => leaf -> dataFiles(fs, leaf)).toMap
     }
   }
 
@@ -1290,20 +1103,18 @@ class Engine(val spark: SparkSession) {
     * of the view directory per trigger. */
   private def gcIncView(state: IncViewState): Unit = {
     val (fs, dirPath) = hadoopFs(state.dir)
-    val leaves = state.history.flatMap(_.values).flatten.toSet
+    val leaves = state.history.flatMap(_.values).toSet
     state.files = state.files.view.filterKeys(leaves).toMap
     val referenced = leaves.map(leaf => new Path(leaf).getParent.getName)
     val entries = fs.listStatus(dirPath)
-    def genOf(n: String) =
-      n.replaceAll("^(manifest|zones)-g", "").stripSuffix(".txt").toLong
+    def genOf(n: String) = n.stripPrefix("manifest-g").stripSuffix(".txt").toLong
     val newestManifest = entries.map(_.getPath.getName)
       .filter(_.matches("manifest-g\\d+\\.txt")).map(genOf).maxOption
     entries.foreach { st =>
       val n = st.getPath.getName
-      if (st.isDirectory && n.matches("g\\d+(-r\\d+)?(-c)?") && !referenced.contains(n))
+      if (st.isDirectory && n.matches("g\\d+(-r\\d+)?") && !referenced.contains(n))
         fs.delete(st.getPath, true)
-      else if (n.matches("(manifest|zones)-g\\d+\\.txt") &&
-          newestManifest.exists(_ > genOf(n)))
+      else if (n.matches("manifest-g\\d+\\.txt") && newestManifest.exists(_ > genOf(n)))
         fs.delete(st.getPath, false)
     }
   }
@@ -1362,17 +1173,7 @@ class Engine(val spark: SparkSession) {
         // resolved from the manifest at CALL time: each pull (and each
         // re-planned batch over it) sees the current generation set; a
         // pinned plan gets viewRetain generations of grace before GC
-        if (state.deltaLog)
-          // base + deltas: last-writer-wins per key, THEN the predicate —
-          // key predicates push through the window partition into parquet,
-          // value predicates apply post-resolution but have already pruned
-          // whole bucket chains above (servingChains/ZoneMap). The bucket
-          // invariant sits below the window, so a key predicate pushed
-          // through it also prunes the read to the key's one chain.
-          resolveLatest(readLeaves(state, deltaSchema(state.schema),
-              servingChains(state, where).flatten), state.keys)
-            .drop("graft_gen", "graft_bucket").where(state.live && expr(where))
-        else readLeaves(state, state.schema, state.manifest.values.flatten.toSeq)
+        readLeaves(state, state.manifest.values.toSeq)
           .drop("graft_bucket").where(state.live && expr(where))
       case None => views.get(view) match {
         case Some(state) => state.snapshot match {

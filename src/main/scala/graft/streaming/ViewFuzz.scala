@@ -12,12 +12,11 @@ import graft.Sessions
 
 /** VIEW-MAINTENANCE differential fuzzer (r12 VERDICT #1): the largest
   * custom body in the engine — complete-mode snapshots, incremental
-  * bucket-upsert, per-trigger delta logs with threshold compaction,
-  * zone-map bucket skipping, DURATION retention, engine-restart recovery
-  * (Engine.scala §3.2, ZoneMap.scala) — was certified only by hand-written
-  * specs. This generalizes the twin method to it: each scenario draws a
-  * random (view definition × maintenance mode × append schedule ×
-  * restart event × two-hop CSAS feed × pull predicates), maintains the
+  * whole-bucket upsert, DURATION retention, engine-restart recovery
+  * (Engine.scala §3.2) — was certified only by hand-written specs. This
+  * generalizes the twin method to it: each scenario draws a random
+  * (view definition × maintenance mode × append schedule × restart
+  * event × two-hop CSAS feed × pull predicates), maintains the
   * view LIVE through a file-backed stream (optionally through a CSAS
   * middle hop — the reference's stream → CSAS → view pipeline,
   * RunSQLSpec.hs:93-128/RegressionSpec — whose stateless transform the
@@ -30,16 +29,11 @@ import graft.Sessions
   * View.hs:166-254); update-mode maintenance = the reference's
   * incremental state (View.hs:94-141). The twin equality asserted here
   * is the materialization-independence of that contract: whatever the
-  * store did — whole-bucket rewrite, delta chain + compaction, snapshot
-  * flip, manifest recovery after a restart — a pull must equal the same
-  * aggregation run fresh over the full input.
-  *
-  * Soundness of ZONE-MAP skipping is part of the compared surface: value
-  * predicates are drawn against delta-log views, where servingChains
-  * prunes whole bucket chains — a wrongly-skipped chain LOSES rows and
-  * breaks the multiset equality. Non-vacuity is asserted separately: the
-  * run must actually have pruned something and compacted something
-  * (otherwise the certification would be of an idle code path).
+  * store did — whole-bucket rewrite, snapshot flip, manifest recovery
+  * after a restart — a pull must equal the same aggregation run fresh
+  * over the full input. Key predicates prune incremental pulls to one
+  * bucket, so a wrongly-pruned bucket LOSES rows and breaks the multiset
+  * equality.
   *
   * Retention uses wall-clock DURATION (the engine's semantics): expired
   * keys carry DECISIVELY-ancient event times (2015) and live keys
@@ -52,8 +46,7 @@ import graft.Sessions
 object ViewFuzz {
 
   final case class Report(name: String, ok: Boolean, detail: String,
-                          pruned: Int = 0, compacted: Int = 0,
-                          expired: Int = 0)
+                          rewrites: Int = 0, expired: Int = 0)
 
   private val schema = StructType(Seq(
     StructField("k", StringType), StructField("v", LongType),
@@ -61,13 +54,12 @@ object ViewFuzz {
 
   private final case class Scenario(
       name: String,
-      mode: String,            // complete | inc | delta | append
-      windowed: Boolean,       // TUMBLE(10 min) grouping (inc/delta only)
-      retention: Boolean,      // DURATION retention (inc/delta only)
+      mode: String,            // complete | inc | append
+      windowed: Boolean,       // TUMBLE(10 min) grouping (inc only)
+      retention: Boolean,      // DURATION retention (inc only)
       restartAt: Option[Int],  // engine restart before batch i
       twoHop: Boolean,         // stream → CSAS → view (the two-hop shape)
       buckets: Int,
-      compactThreshold: Int,
       aggs: Seq[String],       // subset of cnt, sv, mnv, mxv, av
       batches: Vector[Vector[(String, Long, String)]], // (k, v, ts)
       preds: Vector[String])
@@ -96,9 +88,10 @@ object ViewFuzz {
 
   private def genScenario(seed: Long, i: Int): Scenario = {
     val r = mix(seed, i)
-    val mode = Vector("complete", "inc", "delta", "append")(i % 4)
-    val windowed = (mode == "inc" || mode == "delta") && r.nextBoolean()
-    val retention = (mode == "inc" || mode == "delta") && r.nextBoolean()
+    // two of every four scenarios are incremental
+    val mode = Vector("complete", "inc", "inc", "append")(i % 4)
+    val windowed = mode == "inc" && r.nextBoolean()
+    val retention = mode == "inc" && r.nextBoolean()
     val nBatches = 3 + r.nextInt(3)
     val keys = ('a' to ('a' + 3 + r.nextInt(4)).toChar).map(_.toString)
     val hot = pick(r, keys)
@@ -134,7 +127,6 @@ object ViewFuzz {
         Some(1 + r.nextInt(nBatches - 1)) else None,
       twoHop = twoHop,
       buckets = pick(r, Seq(4, 8)),
-      compactThreshold = 1 + r.nextInt(3),
       aggs = aggs, batches = batches, preds = preds)
   }
 
@@ -213,7 +205,7 @@ object ViewFuzz {
     spark.conf.set("spark.graft.viewRoot", viewRoot)
     val stream = s"${sc.name}_s"; val view = s"${sc.name}_v"
     val mid = s"${sc.name}_m"
-    var pruned = 0; var compacted = 0; var expired = 0
+    var expired = 0
     // the two-hop CSAS transform (stateless filter + project — a file
     // sink is append-mode); the referee applies the SAME mapping to its
     // raw rows (csasRows below)
@@ -230,9 +222,8 @@ object ViewFuzz {
       sc.mode match {
         case "complete" => e.createView(view, viewPlan(sc, src))
         case "append" => e.createViewAppend(view, viewPlan(sc, src))
-        case m => e.createViewIncremental(view, viewPlan(sc, src),
+        case _ => e.createViewIncremental(view, viewPlan(sc, src),
           keys = upsertKeys(sc), buckets = sc.buckets,
-          deltaLog = m == "delta", compactThreshold = sc.compactThreshold,
           retainOn = if (sc.retention) Some("mts") else None,
           retention = if (sc.retention) Some("30 days") else None)
       }
@@ -274,17 +265,7 @@ object ViewFuzz {
                 s"batch $b pred [$pred]: got=${g.values.sum} want=${w.values.sum}" +
                   s" extra=${(g.keySet -- w.keySet).take(2).mkString(" | ")}" +
                   s" missing=${(w.keySet -- g.keySet).take(2).mkString(" | ")}")
-            if (sc.mode == "delta") {
-              val total = engine.viewManifestPaths(view).size
-              val served = // chains actually read by THIS pull
-                engine.viewServingPaths(view, pred)
-                  .map(p => p.substring(0, p.lastIndexOf('/'))).distinct.size
-              if (served < total) pruned += 1
-            }
           }
-          if (sc.mode == "delta" &&
-              engine.viewManifestPaths(view).values
-                .exists(_.exists(_.contains("-c/")))) compacted += 1
           if (sc.retention) {
             val lives = engine.pull(view, "true").collect()
             if (all.exists(_._1.startsWith("old")) &&
@@ -310,7 +291,7 @@ object ViewFuzz {
                 s" missing=${(w.keySet -- g.keySet).take(2).mkString(" | ")}")
         }
       }
-      Report(sc.name, ok = true, "", pruned, compacted, expired)
+      Report(sc.name, ok = true, "", expired = expired)
     } catch {
       // NonFatal, NOT Throwable: the mismatch `return Report(...)` sites
       // above sit inside foreach closures, so they unwind through here as
@@ -338,11 +319,11 @@ object ViewFuzz {
   /** A second view's shape for the MULTI-VIEW scenarios: the reference
     * serves many views over shared streams concurrently (per-query
     * allocation, Handler/Query.hs:81-84) — each view here gets its own
-    * mode/buckets/threshold/agg subset over ONE source stream, and pulls
-    * interleave across the two after every batch. */
-  private final case class ViewCfg(mode: String, // complete | inc | delta
+    * mode/buckets/agg subset over ONE source stream, and pulls interleave
+    * across the two after every batch. */
+  private final case class ViewCfg(mode: String, // complete | inc
                                    windowed: Boolean, buckets: Int,
-                                   compactThreshold: Int, aggs: Seq[String])
+                                   aggs: Seq[String])
 
   private def cfgAggs(cfg: ViewCfg) = cfg.aggs.map {
     case "cnt" => count(lit(1)).as("cnt")
@@ -382,13 +363,14 @@ object ViewFuzz {
           r.nextInt(21).toLong - 10, tsOf(60L - b * 10 - r.nextInt(10)))
       }
     }.toVector
-    val modes = r.shuffle(Seq("complete", "inc", "delta"))
-    def cfg(m: String) = ViewCfg(m,
-      windowed = m != "complete" && r.nextBoolean(),
-      buckets = pick(r, Seq(2, 4, 8)),
-      compactThreshold = 1 + r.nextInt(2),
-      aggs = "cnt" +: r.shuffle(Seq("sv", "mnv", "mxv", "av"))
-        .take(1 + r.nextInt(3)))
+    val modes = r.shuffle(Seq("complete", "inc", "inc"))
+    def cfg(m: String) = {
+      val windowed = m != "complete" && r.nextBoolean()
+      val buckets = pick(r, Seq(2, 4, 8))
+      r.nextInt(2) // unused draw: keeps the pinned seeds' later draws
+      ViewCfg(m, windowed, buckets, aggs = "cnt" +:
+        r.shuffle(Seq("sv", "mnv", "mxv", "av")).take(1 + r.nextInt(3)))
+    }
     MultiScenario(
       name = f"vfzm_${seed}%d_${i}%02d_${modes(0)}_${modes(1)}",
       a = cfg(modes(0)), b = cfg(modes(1)),
@@ -412,28 +394,31 @@ object ViewFuzz {
     val stream = s"${sc.name}_s"
     val views = Seq(("a", sc.a), ("b", sc.b)).map { case (sfx, cfg) =>
       (s"${sc.name}_v$sfx", cfg) }
-    var compacted = 0
+    var rewrites = 0
     def mkEngine(): Engine = {
       val e = new Engine(spark)
       e.createFileStream(stream, srcDir, schema)
       views.foreach { case (vn, cfg) =>
         cfg.mode match {
           case "complete" => e.createView(vn, cfgPlan(cfg, e.df(stream)))
-          case m => e.createViewIncremental(vn, cfgPlan(cfg, e.df(stream)),
+          case _ => e.createViewIncremental(vn, cfgPlan(cfg, e.df(stream)),
             keys = if (cfg.windowed) Seq("ws", "k") else Seq("k"),
-            buckets = cfg.buckets, deltaLog = m == "delta",
-            compactThreshold = cfg.compactThreshold)
+            buckets = cfg.buckets)
         }
       }
       e
     }
     def stopAll(e: Engine): Unit = views.foreach { case (vn, _) =>
       try e.terminate(vn) catch { case _: Exception => () } }
+    def incManifests(e: Engine): Map[String, Map[Int, String]] =
+      views.collect { case (vn, cfg) if cfg.mode == "inc" =>
+        vn -> e.viewManifest(vn) }.toMap
     var engine = mkEngine()
     val seen = Vector.newBuilder[(String, Long, String)]
     try {
       sc.batches.zipWithIndex.foreach { case (batch, b) =>
         if (sc.restartAt.contains(b)) { stopAll(engine); engine = mkEngine() }
+        val before = incManifests(engine)
         Files.writeString(java.nio.file.Paths.get(srcDir, s"b$b.json"),
           batch.map { case (k, v, ts) =>
             s"""{"k":"$k","v":$v,"_ts":"$ts"}""" }.mkString("\n"))
@@ -454,12 +439,12 @@ object ViewFuzz {
                   s" missing=${(want.keySet -- got.keySet).take(2).mkString(" | ")}")
           }
         }
-        views.foreach { case (vn, cfg) =>
-          if (cfg.mode == "delta" && engine.viewManifestPaths(vn).values
-                .exists(_.exists(_.contains("-c/")))) compacted += 1
-        }
+        // a batch that rewrote a bucket some earlier generation served
+        val after = incManifests(engine)
+        if (before.exists { case (vn, m) => rewritten(m, after(vn)).nonEmpty })
+          rewrites += 1
       }
-      Report(sc.name, ok = true, "", compacted = compacted)
+      Report(sc.name, ok = true, "", rewrites = rewrites)
     } catch {
       case scala.util.control.NonFatal(e) =>
         Report(sc.name, ok = false,
@@ -478,21 +463,28 @@ object ViewFuzz {
     }
   }
 
+  /** The buckets whose leaf in manifest `before` was replaced by a new one
+    * in `after`: rewrites of buckets an earlier generation served. */
+  private def rewritten(before: Map[Int, String],
+                        after: Map[Int, String]): Iterable[Int] =
+    before.keys.filter(b => after.get(b).exists(_ != before(b)))
+
   def runMulti(spark: SparkSession, seed: Long, n: Int): Seq[Report] =
     (0 until n).map(i => runMultiOne(spark, genMulti(seed, i)))
 
   /** Pull racing an in-flight maintenance transaction (r13 VERDICT #4b):
-    * a delta-log view with compactThreshold 1 (compaction nearly every
-    * trigger) is maintained live, and the [[Engine.incViewSeam]] test
-    * seam issues a FULL pull + referee compare from the maintenance
-    * thread at each transaction point — after the generation's files are
-    * written but before the manifest flips (must serve the PRE-batch
-    * state), after the in-memory flip but before persistence (must serve
-    * the POST-batch state), and after persistence before GC (post-batch
-    * state). Any torn read — new files behind an old manifest, a
-    * half-flipped chain, a pruned-but-live zone — breaks the multiset
-    * equality. Non-vacuity: at least one seam firing must land inside an
-    * actual compaction (manifest carries a `-c/` path at post-flip). */
+    * an incremental view over a few hot keys and 2–4 buckets is
+    * maintained live, and the [[Engine.incViewSeam]] test seam issues a
+    * FULL pull + referee compare from the maintenance thread at each
+    * transaction point — after the generation's files are written but
+    * before the manifest flips (must serve the PRE-batch state), after
+    * the in-memory flip but before persistence (must serve the POST-batch
+    * state), and after persistence before GC (post-batch state). Any torn
+    * read — new files behind an old manifest, a half-flipped manifest —
+    * breaks the multiset equality. Non-vacuity: at least one trigger must
+    * rewrite a bucket an earlier generation already served, with the
+    * post-write pull serving the old leaf while the new leaf's file
+    * exists. */
   def runRaceOne(spark: SparkSession, seed: Long, i: Int): Report = {
     val r = mix(seed, i + 9000)
     val name = f"vfzr_${seed}%d_${i}%02d"
@@ -505,8 +497,8 @@ object ViewFuzz {
           r.nextInt(21).toLong - 10, tsOf(60L - b * 10 - r.nextInt(10)))
       }
     }.toVector
-    val cfg = ViewCfg("delta", windowed = false,
-      buckets = pick(r, Seq(2, 4)), compactThreshold = 1,
+    val cfg = ViewCfg("inc", windowed = false,
+      buckets = pick(r, Seq(2, 4)),
       aggs = "cnt" +: r.shuffle(Seq("sv", "mnv", "mxv"))
         .take(1 + r.nextInt(2)))
     val srcDir = Files.createTempDirectory("graft_vfzr_src").toString
@@ -517,26 +509,36 @@ object ViewFuzz {
     val stream = s"${name}_s"; val view = s"${name}_v"
     val engine = new Engine(spark)
     val mismatches = scala.collection.mutable.Buffer.empty[String]
-    var compactionsSeen = 0
+    var rewritesSeen = 0
     try {
       engine.createFileStream(stream, srcDir, schema)
       engine.createViewIncremental(view, cfgPlan(cfg, engine.df(stream)),
-        keys = Seq("k"), buckets = cfg.buckets, deltaLog = true,
-        compactThreshold = cfg.compactThreshold)
+        keys = Seq("k"), buckets = cfg.buckets)
+      val fs = new org.apache.hadoop.fs.Path(viewRoot)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def exists(leaf: String) = fs.exists(new org.apache.hadoop.fs.Path(leaf))
       val seen = Vector.newBuilder[(String, Long, String)]
       batches.zipWithIndex.foreach { case (batch, b) =>
         val pre = canon(
           cfgRecompute(spark, cfg, seen.result()).collect().toSeq)
         val post = canon(
           cfgRecompute(spark, cfg, seen.result() ++ batch).collect().toSeq)
+        var served = Map.empty[Int, String] // the manifest at "post-write"
         engine.incViewSeam = (v, point) => if (v == view) {
           val got = canon(engine.pull(view, "true").collect().toSeq)
           val want = if (point == "post-write") pre else post
           if (got != want) mismatches +=
             s"batch $b seam $point: got=${got.values.sum} want=${want.values.sum}"
-          if (point == "post-flip" && engine.viewManifestPaths(view)
-                .values.exists(_.exists(_.contains("-c/"))))
-            compactionsSeen += 1
+          if (point == "post-write") served = engine.viewManifest(view)
+          // the generation's leaves are written before "post-write", so
+          // a rewritten bucket's new leaf existed while the old one served
+          if (point == "post-flip") {
+            val now = engine.viewManifest(view)
+            val rw = rewritten(served, now)
+            if (rw.nonEmpty &&
+                rw.forall(bk => exists(served(bk)) && exists(now(bk))))
+              rewritesSeen += 1
+          }
         }
         Files.writeString(java.nio.file.Paths.get(srcDir, s"b$b.json"),
           batch.map { case (k, v, ts) =>
@@ -546,9 +548,10 @@ object ViewFuzz {
       }
       if (mismatches.nonEmpty)
         Report(name, ok = false, mismatches.take(3).mkString(" | "))
-      else if (compactionsSeen == 0)
-        Report(name, ok = false, "vacuous: no seam firing saw a compaction")
-      else Report(name, ok = true, "", compacted = compactionsSeen)
+      else if (rewritesSeen == 0)
+        Report(name, ok = false,
+          "vacuous: no trigger rewrote a bucket an earlier generation served")
+      else Report(name, ok = true, "", rewrites = rewritesSeen)
     } catch {
       case scala.util.control.NonFatal(e) =>
         Report(name, ok = false,
@@ -578,20 +581,19 @@ object ViewFuzz {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)
     val n = if (args.length > 1) args(1).toInt else 12
     val spark = Sessions.local(Sessions.cpus(8))
-    var ok = 0; var fail = 0; var pruned = 0; var compacted = 0; var expired = 0
+    var ok = 0; var fail = 0; var expired = 0
     seeds.foreach { s =>
       val nSide = math.max(2, n / 3) // multi-view + race tiers per seed
       (run(spark, s, n) ++ runMulti(spark, s, nSide) ++
         runRace(spark, s, nSide)).foreach { rep =>
         if (rep.ok) {
-          ok += 1; pruned += rep.pruned; compacted += rep.compacted
-          expired += rep.expired
-          System.err.println(s"[vfz] ok   ${rep.name} pruned=${rep.pruned}" +
-            s" compacted=${rep.compacted} expired=${rep.expired}")
+          ok += 1; expired += rep.expired
+          System.err.println(s"[vfz] ok   ${rep.name} rewrites=${rep.rewrites}" +
+            s" expired=${rep.expired}")
         } else { fail += 1; System.err.println(s"[vfz] FAIL ${rep.name}: ${rep.detail}") }
       }
     }
-    println(s"""{"metric":"viewfuzz","ok":$ok,"fail":$fail,"pruned":$pruned,"compacted":$compacted,"expired":$expired,"seeds":"${seeds.mkString(",")}"}""")
+    println(s"""{"metric":"viewfuzz","ok":$ok,"fail":$fail,"expired":$expired,"seeds":"${seeds.mkString(",")}"}""")
     spark.stop()
     if (fail > 0) sys.exit(1)
   }

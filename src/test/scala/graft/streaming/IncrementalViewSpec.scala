@@ -93,29 +93,26 @@ class IncrementalViewSpec extends SparkSpec {
     e.createStream("kps", schema)
     val plan = e.df("kps").groupBy(col("k")).agg(sum(col("v")).as("total"))
     e.createViewIncremental("kpw", plan, keys = Seq("k"), buckets = 16)
-    e.createViewIncremental("kpd", plan, keys = Seq("k"), buckets = 16, deltaLog = true)
     val keys = (1 to 40).map(i => s"k$i")
     e.insert("kps", keys.map(k => rec(k, 1, "2024-01-01 00:00:00")): _*)
     e.processAll()
     val b7 = bucketOf(spark, 16, lit("k7"))
-    def check(v: String, total: Long, leaves: Int): Unit = {
-      val served = e.viewManifestPaths(v).values.flatten.size
-      assert(e.viewManifestPaths(v)(b7).size == leaves, s"$v: ${e.viewManifestPaths(v)(b7)}")
-      assert(scannedLeaves(e.pull(v, "k = 'k7'")) == (Set(b7), leaves),
-        s"$v: a key pull should read bucket $b7 only, of $served leaves")
-      assert(e.pull(v, "k = 'k7'").collect().map(r => r.getString(0) -> r.getLong(1))
-        .toSeq == Seq("k7" -> total), v)
+    def check(total: Long): Unit = {
+      val served = e.viewManifest("kpw").size
+      assert(scannedLeaves(e.pull("kpw", "k = 'k7'")) == (Set(b7), 1L),
+        s"a key pull should read bucket $b7 only, of $served leaves")
+      assert(e.pull("kpw", "k = 'k7'").collect().map(r => r.getString(0) -> r.getLong(1))
+        .toSeq == Seq("k7" -> total))
       // a pull that fixes no key reads every leaf
-      assert(scannedLeaves(e.pull(v, "total > 0"))._2 == served, v)
+      assert(scannedLeaves(e.pull("kpw", "total > 0"))._2 == served)
     }
-    Seq("kpw", "kpd").foreach(v => check(v, 1L, leaves = 1))
-    // a second trigger: the whole-bucket leaf is rewritten, the delta-log
-    // chain grows to base + delta, and the key pull reads that chain alone
+    check(1L)
+    // a second trigger rewrites the key's bucket; the key pull still reads
+    // that one leaf
     e.insert("kps", rec("k7", 5, "2024-01-01 00:00:01"))
     e.processAll()
-    check("kpw", 6L, leaves = 1)
-    check("kpd", 6L, leaves = 2)
-    e.terminate("kpw"); e.terminate("kpd")
+    check(6L)
+    e.terminate("kpw")
     e.dropStream("kps")
   }
 
@@ -133,25 +130,17 @@ class IncrementalViewSpec extends SparkSpec {
     // hold whole buckets), and later triggers update half the keys, so a
     // rewritten bucket merges kept rows with new ones
     e.createViewIncremental("ofw", plan, keys = Seq("k"), buckets = 5)
-    e.createViewIncremental("ofd", plan, keys = Seq("k"), buckets = 5,
-      deltaLog = true, compactThreshold = 2)
     val keys = (1 to 24).map(i => s"k$i")
-    var compacted = false
     (1 to 3).foreach { t =>
       val touched = if (t == 1) keys else keys.take(12)
       e.insert("ofs", touched.map(k => rec(k, t, s"2024-01-01 00:00:0$t")): _*)
       e.processAll()
-      val leaves = e.viewManifest("ofw").values ++
-        e.viewManifestPaths("ofd").values.flatten
-      leaves.foreach(leaf => assert(parquetFiles(leaf).size == 1,
+      e.viewManifest("ofw").values.foreach(leaf => assert(parquetFiles(leaf).size == 1,
         s"trigger $t: $leaf holds ${parquetFiles(leaf)}"))
-      compacted ||= e.viewManifestPaths("ofd").values.flatten.exists(_.contains("-c/"))
     }
-    assert(compacted, "no compaction ran")
     val want = keys.map(k => k -> (if (keys.indexOf(k) < 12) 6L else 1L)).toMap
-    Seq("ofw", "ofd").foreach(v => assert(
-      e.pull(v).collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want, v))
-    e.terminate("ofw"); e.terminate("ofd")
+    assert(e.pull("ofw").collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want)
+    e.terminate("ofw")
     e.dropStream("ofs")
   }
 
@@ -160,7 +149,6 @@ class IncrementalViewSpec extends SparkSpec {
     e.createStream("wbs", schema)
     val plan = e.df("wbs").groupBy(col("k")).agg(sum(col("v")).as("total"))
     e.createViewIncremental("wbw", plan, keys = Seq("k"))
-    e.createViewIncremental("wbd", plan, keys = Seq("k"), deltaLog = true)
     val records = (1 to 300).map(i => rec(s"k${i % 150}", i, "2024-01-01 00:00:00"))
     e.insert("wbs", records: _*)
     e.processAll()
@@ -168,19 +156,17 @@ class IncrementalViewSpec extends SparkSpec {
       .json(spark.createDataset(records)(org.apache.spark.sql.Encoders.STRING))
       .groupBy(col("k")).agg(sum(col("v")).as("total"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    Seq("wbw", "wbd").foreach { v =>
-      assert(e.viewManifest(v).size > 32, s"$v serves ${e.viewManifest(v).size} buckets")
-      var pulled: org.apache.spark.sql.DataFrame = null
-      assert(jobsStartedBy { pulled = e.pull(v, "total > 0") } == 0, v)
-      assert(pulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want, v)
-      // a key pull plans without a job too, and reads the key's bucket alone
-      var keyPulled: org.apache.spark.sql.DataFrame = null
-      assert(jobsStartedBy { keyPulled = e.pull(v, "k = 'k7'") } == 0, v)
-      assert(scannedLeaves(keyPulled) == (Set(bucketOf(spark, 64, lit("k7"))), 1L), v)
-      assert(keyPulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
-        want.view.filterKeys(_ == "k7").toMap, v)
-    }
-    e.terminate("wbw"); e.terminate("wbd")
+    assert(e.viewManifest("wbw").size > 32, s"serves ${e.viewManifest("wbw").size} buckets")
+    var pulled: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { pulled = e.pull("wbw", "total > 0") } == 0)
+    assert(pulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == want)
+    // a key pull plans without a job too, and reads the key's bucket alone
+    var keyPulled: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { keyPulled = e.pull("wbw", "k = 'k7'") } == 0)
+    assert(scannedLeaves(keyPulled) == (Set(bucketOf(spark, 64, lit("k7"))), 1L))
+    assert(keyPulled.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      want.view.filterKeys(_ == "k7").toMap)
+    e.terminate("wbw")
     e.dropStream("wbs")
   }
 
@@ -214,265 +200,6 @@ class IncrementalViewSpec extends SparkSpec {
       ("a", "2024-01-01 02:00:00.0", 7L)), s"got $rows2")
     e.sql("DROP VIEW wiv;")
     e.sql("DROP STREAM wivs;")
-  }
-
-  test("delta-log mode: N triggers on one key = N small delta files, one threshold compaction, other buckets untouched") {
-    val srcDir = Files.createTempDirectory("graft_dlsrc").toString
-    val viewRoot = Files.createTempDirectory("graft_dlroot").toString
-    val ckptRoot = Files.createTempDirectory("graft_dlckpt").toString
-    spark.conf.set("spark.graft.checkpointRoot", ckptRoot)
-    spark.conf.set("spark.graft.viewRoot", viewRoot)
-    var n = 0
-    def push(lines: String*): Unit = {
-      n += 1
-      Files.writeString(java.nio.file.Paths.get(srcDir, s"f$n.json"),
-        lines.mkString("\n"))
-    }
-    try {
-      val buckets = 8
-      val (k1, k2, b1, b2) = twoKeysDifferentBuckets(buckets)
-      def mkEngine(): Engine = {
-        val e = new Engine(spark)
-        e.createFileStream("dls", srcDir, schema)
-        e
-      }
-      def startView(e: Engine) = e.createViewIncremental("dlv",
-        e.df("dls").groupBy(col("k")).agg(sum(col("v")).as("total")),
-        keys = Seq("k"), buckets = buckets, deltaLog = true, compactThreshold = 3)
-
-      val e = mkEngine()
-      startView(e)
-      push(rec(k1, 1, "2024-01-01 00:00:00"), rec(k2, 100, "2024-01-01 00:00:00"))
-      e.processAll()
-      val m1 = e.viewManifestPaths("dlv")
-      assert(m1(b1).size == 1 && m1(b2).size == 1)
-
-      // two more triggers touch ONLY k1: each appends ONE delta leaf with
-      // ONE row (O(delta) write, not a bucket rewrite); k2's chain must
-      // stay byte-identical throughout
-      (2 to 3).foreach { i =>
-        push(rec(k1, i, s"2024-01-01 00:00:0$i"))
-        e.processAll()
-        val m = e.viewManifestPaths("dlv")
-        assert(m(b1).size == i, s"expected $i delta leaves, got ${m(b1)}")
-        assert(m(b2) == m1(b2), "untouched bucket's chain changed")
-        val newest = spark.read.parquet(m(b1).last)
-        assert(newest.count() == 1, "delta leaf holds more than the changed key")
-      }
-      // …and serving resolves last-writer-wins at every step
-      assert(e.pull("dlv", s"k = '$k1'").head().getLong(1) == 6L)
-
-      // the 4th delta crosses compactThreshold=3: the bucket collapses to
-      // ONE compacted base; the other bucket is still untouched
-      push(rec(k1, 4, "2024-01-01 00:00:04"))
-      e.processAll()
-      val mc = e.viewManifestPaths("dlv")
-      assert(mc(b1).size == 1, s"expected compacted single base, got ${mc(b1)}")
-      assert(mc(b1).head.contains("-c/"), s"not a compaction dir: ${mc(b1)}")
-      assert(mc(b2) == m1(b2), "untouched bucket's chain changed by compaction")
-      assert(e.pull("dlv").collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
-        Map(k1 -> 10L, k2 -> 100L))
-
-      // deltas keep winning over the compacted base (generations survive)
-      push(rec(k1, 5, "2024-01-01 00:00:05"))
-      e.processAll()
-      assert(e.viewManifestPaths("dlv")(b1).size == 2)
-      assert(e.pull("dlv", s"k = '$k1'").head().getLong(1) == 15L)
-
-      // null group keys resolve in place too (window partitioning groups
-      // nulls; no stale-row append as with plain-equality anti-joins)
-      push("""{"v":7,"_ts":"2024-01-01 00:00:06"}""")
-      e.processAll()
-      push("""{"v":8,"_ts":"2024-01-01 00:00:07"}""")
-      e.processAll()
-      val nullRows = e.pull("dlv", "k IS NULL").collect()
-      assert(nullRows.length == 1 && nullRows.head.getLong(1) == 15L,
-        s"stale null-key rows: ${nullRows.toSeq}")
-
-      // restart recovery parses the multi-path manifest chain and serves it
-      // BEFORE any new trigger; agg state resumes from the checkpoint
-      e.terminate("dlv")
-      val e2 = mkEngine()
-      startView(e2)
-      assert(e2.pull("dlv", s"k = '$k1'").head().getLong(1) == 15L,
-        "delta chain not recovered from manifest")
-      push(rec(k1, 10, "2024-01-01 00:00:08"))
-      e2.processAll()
-      assert(e2.pull("dlv", s"k = '$k1'").head().getLong(1) == 25L,
-        "agg state lost across restart")
-      e2.terminate("dlv")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointRoot")
-      spark.conf.unset("spark.graft.viewRoot")
-    }
-  }
-
-  test("compaction of an ALL-EXPIRED bucket records an empty chain, not a dangling path (r13 ViewFuzz find)") {
-    // delta-log + retention: an update to an already-expired key grows its
-    // chain past the threshold; compaction sheds every row of the bucket
-    // (all past retention), so the partitioned write creates NO dir for
-    // it — the manifest previously still pointed there and every later
-    // pull died with PATH_NOT_FOUND
-    val srcDir = Files.createTempDirectory("graft_exsrc").toString
-    val viewRoot = Files.createTempDirectory("graft_exroot").toString
-    val ckptRoot = Files.createTempDirectory("graft_exckpt").toString
-    spark.conf.set("spark.graft.checkpointRoot", ckptRoot)
-    spark.conf.set("spark.graft.viewRoot", viewRoot)
-    var n = 0
-    def push(lines: String*): Unit = {
-      n += 1
-      Files.writeString(java.nio.file.Paths.get(srcDir, s"x$n.json"),
-        lines.mkString("\n"))
-    }
-    try {
-      val e = new Engine(spark)
-      e.createFileStream("exs", srcDir, schema)
-      e.createViewIncremental("exv",
-        e.df("exs").groupBy(col("k"))
-          .agg(sum(col("v")).as("total"), max(col("_ts")).as("mts")),
-        keys = Seq("k"), buckets = 4, deltaLog = true, compactThreshold = 1,
-        retainOn = Some("mts"), retention = Some("30 days"))
-      val fresh = tsNowish()
-      push(rec("oldk", 1, "2015-01-01 00:00:00"), rec("live", 5, fresh))
-      e.processAll()
-      // second update to the EXPIRED key crosses compactThreshold=1 →
-      // its bucket compacts; every row there is past retention
-      push(rec("oldk", 2, "2015-01-01 00:01:00"))
-      e.processAll()
-      // the pull must serve, with the expired key absent and the live one
-      // intact (this threw PATH_NOT_FOUND before the fix)
-      val rows = e.pull("exv").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(rows == Map("live" -> 5L), s"got $rows")
-      // and the expired key REVIVES if fresh input arrives (the aggregate
-      // state lives in the checkpoint, not the store)
-      push(rec("oldk", 3, fresh))
-      e.processAll()
-      val rows2 = e.pull("exv").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(rows2 == Map("live" -> 5L, "oldk" -> 6L), s"got $rows2")
-      e.terminate("exv")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointRoot")
-      spark.conf.unset("spark.graft.viewRoot")
-    }
-  }
-
-  private def tsNowish(): String =
-    // explicit pattern — LocalDateTime.toString omits ":ss" at second 0,
-    // which Timestamp.valueOf rejects (the ViewFuzz tsOf flake)
-    java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-      .minusMinutes(5).withNano(0).format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd HH:mm:ss"))
-
-  test("delta-log zone maps: value predicates prune whole bucket chains, soundly") {
-    val srcDir = Files.createTempDirectory("graft_zmsrc").toString
-    val viewRoot = Files.createTempDirectory("graft_zmroot").toString
-    val ckptRoot = Files.createTempDirectory("graft_zmckpt").toString
-    spark.conf.set("spark.graft.checkpointRoot", ckptRoot)
-    spark.conf.set("spark.graft.viewRoot", viewRoot)
-    var n = 0
-    def push(lines: String*): Unit = {
-      n += 1
-      Files.writeString(java.nio.file.Paths.get(srcDir, s"f$n.json"),
-        lines.mkString("\n"))
-    }
-    try {
-      val buckets = 8
-      def mkEngine(): Engine = {
-        val e = new Engine(spark)
-        e.createFileStream("zms", srcDir, schema)
-        e
-      }
-      def startView(e: Engine) = e.createViewIncremental("zmv",
-        e.df("zms").groupBy(col("k")).agg(sum(col("v")).as("total")),
-        keys = Seq("k"), buckets = buckets, deltaLog = true, compactThreshold = 10)
-
-      val e = mkEngine(); startView(e)
-      // 8 cold keys (totals 1..8) spread across buckets, one hot key
-      push((('a' to 'h').zipWithIndex.map { case (k, i) =>
-        rec(k.toString, i + 1, "2024-01-01 00:00:00") } :+
-        rec("hot", 1000, "2024-01-01 00:00:00")): _*)
-      e.processAll()
-
-      val all = e.viewServingPaths("zmv", "true")
-      val kept = e.viewServingPaths("zmv", "total > 100")
-      // only the hot key's bucket chain can satisfy the range test
-      val bHot = spark.range(1)
-        .select(pmod(hash(lit("hot")), lit(buckets))).head().getInt(0)
-      assert(kept.toSet == e.viewManifestPaths("zmv")(bHot).toSet,
-        s"expected only the hot bucket's chain, got $kept of $all")
-      assert(kept.size < all.size)
-      // …and the pruned pull returns exactly the right rows
-      assert(e.pull("zmv", "total > 100").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toSeq == Seq("hot" -> 1000L))
-      // STRING zone maps: equality/range predicates on string output
-      // columns prune chains too (UTF-8 binary order — Spark's own)
-      val bA = spark.range(1)
-        .select(pmod(hash(lit("a")), lit(buckets))).head().getInt(0)
-      val keptA = e.viewServingPaths("zmv", "k = 'a'")
-      assert(keptA.size < all.size, "string equality should prune chains")
-      assert(e.viewManifestPaths("zmv")(bA).toSet.subsetOf(keptA.toSet),
-        "the chain holding k='a' must survive string pruning")
-      assert(e.pull("zmv", "k = 'a'").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toSeq == Seq("a" -> 1L))
-      // a string value beyond every zone's max prunes everything
-      assert(e.viewServingPaths("zmv", "k = 'zzz'").isEmpty)
-      assert(e.pull("zmv", "k = 'zzz'").collect().isEmpty)
-      // truly non-prunable predicates (expression over the column) still
-      // serve every chain
-      assert(e.viewServingPaths("zmv", "length(k) = 1").size == all.size)
-
-      // SOUNDNESS: the hot total drops below the threshold in a later
-      // generation — the chain's union still passes the range test, so the
-      // bucket is served, and post-resolution filtering returns nothing.
-      // (File-level pruning would drop only the new delta and resurrect
-      // the stale 1000 — the exact unsoundness ZoneMap's doc names.)
-      push(rec("hot", -990, "2024-01-01 00:00:01"))
-      e.processAll()
-      assert(e.viewServingPaths("zmv", "total > 100").nonEmpty)
-      assert(e.pull("zmv", "total > 100").collect().isEmpty,
-        "stale generation leaked through zone pruning")
-      assert(e.pull("zmv", "total >= 10").head().getString(0) == "hot")
-
-      // zones recover across an engine restart via the manifest's sidecar
-      e.terminate("zmv")
-      val e2 = mkEngine(); startView(e2)
-      val kept2 = e2.viewServingPaths("zmv", "total > 100")
-      assert(kept2.toSet == e2.viewManifestPaths("zmv")(bHot).toSet,
-        "zone pruning lost after restart")
-      // string zones survive the sidecar round-trip too
-      assert(e2.viewServingPaths("zmv", "k = 'zzz'").isEmpty,
-        "string zone pruning lost after restart")
-      e2.terminate("zmv")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointRoot")
-      spark.conf.unset("spark.graft.viewRoot")
-    }
-  }
-
-  test("dialect opt-in: spark.graft.viewDeltaLog=true maintains a view as delta chains") {
-    spark.conf.set("spark.graft.viewDeltaLog", "true")
-    spark.conf.set("spark.graft.viewDeltaCompactThreshold", "2")
-    try {
-      val e = new graft.sql.SqlEngine(spark)
-      e.sql("CREATE STREAM dlqs (k STRING, v INTEGER, _ts TIMESTAMP);")
-      e.sql("CREATE VIEW dlqv AS SELECT k, SUM(v) AS total FROM dlqs GROUP BY k;")
-      (1 to 3).foreach { i =>
-        e.sql(s"INSERT INTO dlqs (k, v, _ts) VALUES ('a', $i, '2024-01-01 00:00:0$i');")
-        e.engine.processAll()
-      }
-      // chains grew then compacted at threshold 2 (3rd delta -> 1 base)
-      val chain = e.engine.viewManifestPaths("dlqv").values.flatten.toList
-      assert(chain.size == 1 && chain.head.contains("-c/"),
-        s"expected one compacted base, got $chain")
-      assert(e.engine.pull("dlqv", "k = 'a'").head().getLong(1) == 6L)
-      e.sql("DROP VIEW dlqv;")
-      e.sql("DROP STREAM dlqs;")
-    } finally {
-      spark.conf.unset("spark.graft.viewDeltaLog")
-      spark.conf.unset("spark.graft.viewDeltaCompactThreshold")
-    }
   }
 
   test("null group key upserts in place (null-safe anti-join), no stale rows") {
@@ -533,6 +260,78 @@ class IncrementalViewSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.graft.checkpointRoot")
       spark.conf.unset("spark.graft.viewRoot")
+    }
+  }
+
+  /** Runs `body` against a view directory written by hand under a fresh
+    * viewRoot: one parquet file of (k, total, gen) rows per leaf,
+    * and one manifest with a line per (bucket, its leaves), as the
+    * removed delta-log storage persisted them. `body` gets the view dir. */
+  private def withHandWrittenView(view: String,
+                                  leaves: Map[String, Seq[(String, Long)]],
+                                  manifest: Seq[(Int, Seq[String])])
+                                 (body: (Engine, String) => Unit): Unit = {
+    val viewRoot = Files.createTempDirectory("graft_hwroot").toString
+    val ckptRoot = Files.createTempDirectory("graft_hwckpt").toString
+    spark.conf.set("spark.graft.checkpointRoot", ckptRoot)
+    spark.conf.set("spark.graft.viewRoot", viewRoot)
+    try {
+      import spark.implicits._
+      val dir = s"$viewRoot/$view"
+      leaves.foreach { case (leaf, rows) =>
+        rows.map { case (k, total) => (k, total, 7L) }.toDF("k", "total", "gen")
+          .coalesce(1).write.parquet(s"$dir/$leaf")
+      }
+      Files.writeString(java.nio.file.Paths.get(dir, "manifest-g7.txt"),
+        manifest.map { case (bk, ls) => (bk.toString +: ls.map(l => s"$dir/$l")).mkString("\t") }
+          .mkString("\n"))
+      val e = new Engine(spark)
+      e.createStream(s"${view}_s", schema)
+      try body(e, dir) finally e.dropStream(s"${view}_s")
+    } finally {
+      spark.conf.unset("spark.graft.checkpointRoot")
+      spark.conf.unset("spark.graft.viewRoot")
+    }
+  }
+
+  private def sumView(e: Engine, view: String): DataFrame =
+    e.df(s"${view}_s").groupBy(col("k")).agg(sum(col("v")).as("total"))
+
+  test("recovery refuses a manifest line that serves a bucket from several leaves") {
+    // a base + delta chain: its files hold superseded rows for a key, so
+    // serving the chain as one whole bucket would answer wrongly
+    val b = bucketOf(spark, 64, lit("a"))
+    val chain = Seq(s"g6-c/graft_bucket=$b", s"g7/graft_bucket=$b")
+    withHandWrittenView("hwc", Map(chain(0) -> Seq("a" -> 3L), chain(1) -> Seq("a" -> 8L)),
+        Seq(b -> chain)) { (e, _) =>
+      val err = intercept[IllegalStateException](
+        e.createViewIncremental("hwc", sumView(e, "hwc"), Seq("k")))
+      assert(err.getMessage.contains("incremental view hwc") &&
+        err.getMessage.contains("delta-log view storage, which was removed"), err.getMessage)
+      // the refused view was never registered: a pull does not find it
+      intercept[Exception](e.pull("hwc").collect())
+    }
+  }
+
+  test("recovery serves one-leaf manifest lines with extra file columns and ignores a zones file") {
+    // a first delta and a compacted base hold one row per key, plus a
+    // generation column the view schema does not read
+    val (ba, bb) = (bucketOf(spark, 64, lit("a")), bucketOf(spark, 64, lit("b")))
+    assert(ba != bb)
+    val (la, lb) = (s"g5/graft_bucket=$ba", s"g7-c/graft_bucket=$bb")
+    withHandWrittenView("hwo", Map(la -> Seq("a" -> 3L), lb -> Seq("b" -> 5L)),
+        Seq(ba -> Seq(la), bb -> Seq(lb))) { (e, dir) =>
+      Files.writeString(java.nio.file.Paths.get(dir, "zones-g7.txt"), "not\ta zone map")
+      e.createViewIncremental("hwo", sumView(e, "hwo"), Seq("k"))
+      def served = e.pull("hwo").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(served == Map("a" -> 3L, "b" -> 5L))
+      assert(scannedLeaves(e.pull("hwo", "k = 'a'")) == (Set(ba), 1L))
+      // a trigger rewrites a's bucket over its recovered leaf; b is kept
+      // (the aggregate state starts empty: no checkpoint was written)
+      e.insert("hwo_s", rec("a", 4, "2024-01-01 00:00:00"), rec("c", 1, "2024-01-01 00:00:00"))
+      e.processAll()
+      assert(served == Map("a" -> 4L, "b" -> 5L, "c" -> 1L))
+      e.terminate("hwo")
     }
   }
 

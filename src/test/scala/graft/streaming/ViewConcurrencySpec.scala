@@ -17,8 +17,7 @@ import graft.SparkSpec
   * observed halfway, or a bucket served from generation k and another
   * from k') shows mixed k and fails the referee. Batches may coalesce
   * (state jumps i→j), which the prefix-state referee accepts by
-  * construction. Both upsert modes run; delta-log uses
-  * compactThreshold=1 so readers race mid-compaction chains too. */
+  * construction. */
 class ViewConcurrencySpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -42,22 +41,21 @@ class ViewConcurrencySpec extends SparkSpec {
     else None
   }
 
-  private def runRace(mode: String, deltaLog: Boolean): Unit = {
+  private def runRace(mode: String): Unit = {
     val e = new Engine(spark)
     val stream = s"cr_$mode"
     val view = s"crv_$mode"
     e.createStream(stream, schema)
     val plan = e.df(stream).groupBy(col("k")).agg(sum(col("v")).as("total"))
-    e.createViewIncremental(view, plan, Seq("k"), buckets = 8,
-      deltaLog = deltaLog, compactThreshold = 1)
+    e.createViewIncremental(view, plan, Seq("k"), buckets = 8)
 
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val observed = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
     val readers = (0 until nReaders).map { r =>
       new Thread(() => {
-        // half the readers pull with a value predicate (delta-log: the
-        // zone-pruned path), half unfiltered — both race the same flips
+        // half the readers pull with a value predicate, half unfiltered —
+        // both race the same flips
         val where = if (r % 2 == 0) "true" else "total >= 0"
         while (!stop.get()) {
           try {
@@ -104,10 +102,6 @@ class ViewConcurrencySpec extends SparkSpec {
   }
 
   test("whole-bucket upserts: N reader threads pull consistent prefix states mid-flip") {
-    runRace("wb", deltaLog = false)
-  }
-
-  test("delta-log upserts with per-batch compaction: concurrent pulls never torn") {
-    runRace("dl", deltaLog = true)
+    runRace("wb")
   }
 }

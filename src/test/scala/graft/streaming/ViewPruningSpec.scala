@@ -11,8 +11,8 @@ import IncrementalViewSpec.{bucketOf, scannedLeaves}
   * scan carries the stored-row invariant `graft_bucket = pmod(hash(keys),
   * buckets)` and Catalyst folds it to a constant partition filter. Here
   * every key pulled by equality must return exactly the rows the unpruned
-  * answer holds for it, in both maintenance modes, over the key values
-  * where hashing is easiest to get wrong; and predicates that must not
+  * answer holds for it, over the key values where hashing is easiest to
+  * get wrong; and predicates that must not
   * prune (IN, OR, a cast key, a range, one key of two) must still return
   * the right rows.
   */
@@ -49,17 +49,13 @@ class ViewPruningSpec extends SparkSpec {
     val byK = e.df("vps").groupBy(col("k")).agg(sum(col("v")).as("total"))
     val byN = e.df("vps").groupBy(col("n")).agg(sum(col("v")).as("total"))
     e.createViewIncremental("vpkw", byK, keys = Seq("k"), buckets = buckets)
-    e.createViewIncremental("vpkd", byK, keys = Seq("k"), buckets = buckets,
-      deltaLog = true, compactThreshold = 2)
     e.createViewIncremental("vpnw", byN, keys = Seq("n"), buckets = buckets)
-    e.createViewIncremental("vpnd", byN, keys = Seq("n"), buckets = buckets,
-      deltaLog = true, compactThreshold = 2)
     val ks = Seq(None, Some("a"), Some("b"), Some("ü"), Some("日本語"),
       Some("x y"), Some(""), Some("z"))
     val ns = Seq(None, Some(0L), Some(-5L), Some(-1L), Some(Long.MaxValue),
       Some(Long.MinValue), Some(9000000000L), Some(42L))
     // three triggers that touch overlapping key sets, so whole-bucket
-    // rewrites merge kept rows and delta-log chains grow and compact
+    // rewrites merge kept rows
     val inserted = (1 to 3).flatMap { t =>
       val touched = ks.zip(ns).zipWithIndex.filter { case (_, i) => t == 1 || i % t == 0 }
       e.insert("vps", touched.map { case ((k, n), i) =>
@@ -67,8 +63,6 @@ class ViewPruningSpec extends SparkSpec {
       e.processAll()
       touched.map { case ((k, n), i) => (k, n, 10L * t + i) }
     }
-    assert(e.viewManifestPaths("vpkd").values.flatten.exists(_.contains("-c/")),
-      "no compaction ran")
 
     def checkEvery(view: String, key: String, values: Seq[Option[Any]],
                    keyOf: ((Option[String], Option[Long], Long)) => Option[Any]): Unit = {
@@ -92,71 +86,60 @@ class ViewPruningSpec extends SparkSpec {
       val nullSafe = s"$key <=> NULL"
       assert(rows(e.pull(view, nullSafe)) == expected(full, nullSafe), s"$view $nullSafe")
     }
-    Seq("vpkw", "vpkd").foreach(checkEvery(_, "k", ks, _._1))
-    Seq("vpnw", "vpnd").foreach(checkEvery(_, "n", ns, _._2))
+    checkEvery("vpkw", "k", ks, _._1)
+    checkEvery("vpnw", "n", ns, _._2)
 
     // predicates that fix no single bucket still return the right rows
     val unprunable = Seq(
-      "vpkw" -> "k IN ('a', 'ü', 'z')", "vpkd" -> "k IN ('a', 'ü', 'z')",
-      "vpkw" -> "k = 'a' OR k = '日本語'", "vpkd" -> "k = 'a' OR total > 30",
-      "vpnw" -> "CAST(n AS STRING) = '-5'", "vpnd" -> "CAST(n AS STRING) = '-5'",
-      "vpnw" -> "n > 0", "vpnd" -> "n BETWEEN -5 AND 42")
+      "vpkw" -> "k IN ('a', 'ü', 'z')", "vpkw" -> "k = 'a' OR k = '日本語'",
+      "vpkw" -> "k = 'a' OR total > 30", "vpnw" -> "CAST(n AS STRING) = '-5'",
+      "vpnw" -> "n > 0", "vpnw" -> "n BETWEEN -5 AND 42")
     unprunable.foreach { case (view, where) =>
       val full = e.pull(view)
       val want = expected(full, where)
       assert(want.nonEmpty, s"$view $where selects nothing")
       assert(rows(e.pull(view, where)) == want, s"$view $where")
     }
-    Seq("vpkw", "vpkd", "vpnw", "vpnd").foreach(e.terminate)
+    Seq("vpkw", "vpnw").foreach(e.terminate)
     e.dropStream("vps")
   }
 
   test("a two-key TUMBLE view prunes when both keys are fixed and answers one key alone whole, both modes") {
-    Seq(false, true).foreach { deltaLog =>
-      spark.conf.set("spark.graft.viewDeltaLog", deltaLog.toString)
-      spark.conf.set("spark.graft.viewDeltaCompactThreshold", "2")
-      try {
-        val e = new graft.sql.SqlEngine(spark)
-        val (s, v) = (s"tps$deltaLog", s"tpv$deltaLog")
-        e.sql(s"CREATE STREAM $s (event_type STRING, v INTEGER, _ts TIMESTAMP);")
-        e.sql(s"""CREATE VIEW $v AS SELECT event_type, SUM(v) AS total
-                  FROM TUMBLE($s, INTERVAL 1 HOUR) GROUP BY event_type;""")
-        val types = Seq("click", "view", "ünï", "")
-        (0 to 2).foreach { t =>
-          types.zipWithIndex.foreach { case (et, i) =>
-            e.sql(s"INSERT INTO $s (event_type, v, _ts) VALUES " +
-              s"('$et', ${t * 10 + i}, '2024-01-01 0${(t + i) % 4}:10:00');")
-          }
-          e.sql(s"INSERT INTO $s (v, _ts) VALUES ($t, '2024-01-01 01:30:00');")
-          e.engine.processAll()
-        }
-        val full = e.batch(s"SELECT event_type, total, window_start FROM $v;")
-        val fullRows = full.collect()
-        assert(fullRows.length > types.size, s"deltaLog=$deltaLog: ${fullRows.toSeq}")
-        fullRows.foreach { r =>
-          val ws = r.getAs[java.sql.Timestamp]("window_start").toString.stripSuffix(".0")
-          val et = Option(r.getString(0))
-          // the dialect's `=` is null-safe: NULL = NULL holds
-          val cond = s"event_type = ${et.fold("NULL")(x => s"'$x'")} " +
-            s"AND window_start = TIMESTAMP '$ws'"
-          val pulled = e.batch(s"SELECT event_type, total, window_start FROM $v WHERE $cond;")
-          assert(rows(pulled) == Set(r), s"deltaLog=$deltaLog $cond")
-          // the dialect serves 64 buckets; a NULL key plans as IS NULL,
-          // which fixes no literal, so only non-null keys must prune
-          if (et.isDefined) assert(scannedLeaves(pulled)._1 == Set(bucketOf(spark, 64,
-            lit(et.get), expr(s"TIMESTAMP '$ws'"))),
-            s"deltaLog=$deltaLog $cond was not pruned")
-          // one key of two: every bucket may hold it, and the answer is whole
-          val oneKey = s"window_start = TIMESTAMP '$ws'"
-          assert(rows(e.batch(s"SELECT event_type, total, window_start FROM $v WHERE $oneKey;")) ==
-            expected(full, oneKey), s"deltaLog=$deltaLog $oneKey")
-        }
-        e.sql(s"DROP VIEW $v;")
-        e.sql(s"DROP STREAM $s;")
-      } finally {
-        spark.conf.unset("spark.graft.viewDeltaLog")
-        spark.conf.unset("spark.graft.viewDeltaCompactThreshold")
+    val e = new graft.sql.SqlEngine(spark)
+    val (s, v) = ("tps", "tpv")
+    e.sql(s"CREATE STREAM $s (event_type STRING, v INTEGER, _ts TIMESTAMP);")
+    e.sql(s"""CREATE VIEW $v AS SELECT event_type, SUM(v) AS total
+              FROM TUMBLE($s, INTERVAL 1 HOUR) GROUP BY event_type;""")
+    val types = Seq("click", "view", "ünï", "")
+    (0 to 2).foreach { t =>
+      types.zipWithIndex.foreach { case (et, i) =>
+        e.sql(s"INSERT INTO $s (event_type, v, _ts) VALUES " +
+          s"('$et', ${t * 10 + i}, '2024-01-01 0${(t + i) % 4}:10:00');")
       }
+      e.sql(s"INSERT INTO $s (v, _ts) VALUES ($t, '2024-01-01 01:30:00');")
+      e.engine.processAll()
     }
+    val full = e.batch(s"SELECT event_type, total, window_start FROM $v;")
+    val fullRows = full.collect()
+    assert(fullRows.length > types.size, fullRows.toSeq.toString)
+    fullRows.foreach { r =>
+      val ws = r.getAs[java.sql.Timestamp]("window_start").toString.stripSuffix(".0")
+      val et = Option(r.getString(0))
+      // the dialect's `=` is null-safe: NULL = NULL holds
+      val cond = s"event_type = ${et.fold("NULL")(x => s"'$x'")} " +
+        s"AND window_start = TIMESTAMP '$ws'"
+      val pulled = e.batch(s"SELECT event_type, total, window_start FROM $v WHERE $cond;")
+      assert(rows(pulled) == Set(r), cond)
+      // the dialect serves 64 buckets; a NULL key plans as IS NULL,
+      // which fixes no literal, so only non-null keys must prune
+      if (et.isDefined) assert(scannedLeaves(pulled)._1 == Set(bucketOf(spark, 64,
+        lit(et.get), expr(s"TIMESTAMP '$ws'"))), s"$cond was not pruned")
+      // one key of two: every bucket may hold it, and the answer is whole
+      val oneKey = s"window_start = TIMESTAMP '$ws'"
+      assert(rows(e.batch(s"SELECT event_type, total, window_start FROM $v WHERE $oneKey;")) ==
+        expected(full, oneKey), oneKey)
+    }
+    e.sql(s"DROP VIEW $v;")
+    e.sql(s"DROP STREAM $s;")
   }
 }

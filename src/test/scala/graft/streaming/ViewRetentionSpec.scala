@@ -14,7 +14,7 @@ import graft.SparkSpec
   * also bounds the GROW-FOREVER view stores — append-mode session logs and
   * incremental upsert tables. Rows past retention vanish from pull() AND
   * their storage is physically reclaimed (partition-dir GC for append logs;
-  * shed-on-rewrite/compaction for incremental buckets). The reference ties
+  * shed-on-rewrite for incremental buckets). The reference ties
   * the same option to stream backlog (AST.hs:703-750). */
 class ViewRetentionSpec extends SparkSpec {
 
@@ -127,28 +127,6 @@ class ViewRetentionSpec extends SparkSpec {
     assert(onDisk.count() == 1, "expired window row not shed from rewritten bucket")
     e.terminate("riv")
     e.dropStream("ris")
-  }
-
-  test("delta-log mode + retention: expired keys vanish from pull without any bucket rewrite") {
-    val e = new Engine(spark)
-    e.createStream("rds", schema)
-    val plan = StreamOps.tumble(e.df("rds"), "_ts", "1 hour",
-        Seq(col("k")), grace = "1 second")
-      .agg(sum(col("v")).as("total"))
-      .select(col("k"), col("window.start").as("window_start"), col("total"))
-    e.createViewIncremental("rdv", plan, keys = Seq("k", "window_start"),
-      buckets = 4, deltaLog = true, compactThreshold = 8,
-      retainOn = Some("window_start"), retention = Some("1 HOUR"))
-    val now = Instant.now()
-    e.insert("rds", rec("a", 5, "2024-01-01 00:10:00"), rec("b", 7, ts(now)))
-    e.processAll()
-    // both delta chains exist on disk; the expired window serves nothing —
-    // the retention filter applies ABOVE last-writer-wins resolution, so no
-    // rewrite/compaction is needed for the row to vanish
-    val served = e.pull("rdv").collect().map(r => (r.getString(0), r.getLong(2))).toSet
-    assert(served == Set(("b", 7L)), s"got ${served.toSeq}")
-    e.terminate("rdv")
-    e.dropStream("rds")
   }
 
   test("dialect: a stream's DURATION option flows into its view's retention") {
