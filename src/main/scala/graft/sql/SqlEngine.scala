@@ -69,36 +69,16 @@ class SqlEngine(spark: SparkSession) {
       // form (gap-merged sessions held in flatMapGroupsWithState state).
       val name = s"q${queryCounter.incrementAndGet()}"
       val perRow = spark.conf.getOption("spark.graft.emitPerRow").contains("true")
-      def perRowPlan = q match {
-        case sel: Select if perRow => perRowForm(sel)
+      val append = qNeedsAppendMode(q)
+      val perRowPlan = q match {
+        case sel: Select if perRow => perRowForm(sel, append)
         case _ => None // per-row cadence covers single-SELECT aggregates only
       }
-      def perRowSrc(sel: Select): org.apache.spark.sql.DataFrame = {
-        planOf(sel) // full plan-time validation (TypeCheck on the items)
-        val (rawFrom, _) = stripWindow(sel.from)
-        planOf(Select(Seq(ItemWildcard(None)), rawFrom, sel.where, Nil, None))
-      }
-      if (qNeedsAppendMode(q)) perRowPlan match {
-        case Some((keys, aggs, Some(SessionWin(gap)))) =>
-          val src = perRowSrc(q.asInstanceOf[Select])
-          val ts = if (src.columns.contains("_ts")) "_ts" else "ts"
-          Started(engine.emitChangesPerRowSession(name, src, keys, aggs, ts, gap))
-        case _ => Started(engine.createStreamAs(name, planOf(q)))
-      }
-      else perRowPlan match {
-        case Some((keys, aggs, winSpec)) =>
-          val src = perRowSrc(q.asInstanceOf[Select])
-          Started(winSpec match {
-            case Some(FixedWin(size, advance)) =>
-              val ts = if (src.columns.contains("_ts")) "_ts" else "ts"
-              engine.emitChangesPerRowWindowed(name, src, keys, aggs, ts,
-                size, advance)
-            case Some(_: SessionWin) => // unreachable: sessions are append-mode
-              engine.emitChanges(name, planOf(q))
-            case None => engine.emitChangesPerRow(name, src, keys, aggs)
-          })
-        case None => Started(engine.emitChanges(name, planOf(q)))
-      }
+      Started(perRowPlan match {
+        case Some(plan) => engine.emitChanges(name, plan)
+        case None if append => engine.createStreamAs(name, planOf(q))
+        case None => engine.emitChanges(name, planOf(q))
+      })
     case SelectStmt(q) =>
       Rows(planOf(q)) // batch / pull query
     case CreateStream(name, schema, options) =>
@@ -344,49 +324,50 @@ class SqlEngine(spark: SparkSession) {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  /** The per-row-emission form of an EMIT CHANGES select, when it fits
+  /** The per-row-emission plan of an EMIT CHANGES select, when it fits
     * EXACTLY (so the output schema is identical to the micro-batch path's
     * and flipping spark.graft.emitPerRow never reorders/renames columns):
-    * unwindowed OR a top-level TUMBLE/HOP (whose bounds append after the
-    * aggs, same as the micro-batch path); SELECT list = the bare GROUP BY
-    * keys first, unaliased, in GROUP BY order, then only
-    * COUNT(*)/COUNT/SUM/MIN/MAX/AVG over bare columns; no HAVING. Anything
-    * else falls back to micro-batch cadence. Returns (keys, aggs,
-    * window size+advance if windowed). */
-  /** Window kind a per-row plan runs under: fixed (TUMBLE/HOP — window
-    * folds into the stateful key) or session (gap-merged — sessions live
-    * in the state value). */
-  private sealed trait PerRowWin
-  private case class FixedWin(size: String, advance: Option[String]) extends PerRowWin
-  private case class SessionWin(gap: String) extends PerRowWin
-
-  private def perRowForm(sel: Select)
-      : Option[(Seq[String], Seq[StreamOps.RowAgg], Option[PerRowWin])] = {
+    * unwindowed OR a top-level TUMBLE/HOP/SESSION (whose bounds append
+    * after the aggs, same as the micro-batch path); SELECT list = the bare
+    * GROUP BY keys first, unaliased, in GROUP BY order, then only
+    * COUNT(*)/COUNT/SUM/MIN/MAX/AVG over bare columns; no HAVING. An
+    * append-mode query (`appendMode`) has a per-row form only over a
+    * SESSION window (gap-merged sessions held in state). Anything else
+    * keeps micro-batch cadence (None). */
+  private def perRowForm(sel: Select, appendMode: Boolean): Option[DataFrame] = {
     if (sel.having.nonEmpty) return None
     // only a TOP-LEVEL window qualifies (possibly aliased); windows
     // nested in subqueries/joins keep micro-batch cadence
-    val winSpec: Option[PerRowWin] = stripWindow(sel.from) match {
-      case (_, None) => if (hasWindow(sel.from)) return None else None
-      case (_, Some(Tumble(i))) => Some(FixedWin(Translate.intervalString(i), None))
-      case (_, Some(Hop(s, a))) =>
-        Some(FixedWin(Translate.intervalString(s), Some(Translate.intervalString(a))))
-      case (_, Some(Session(g))) => Some(SessionWin(Translate.intervalString(g)))
-    }
+    val (rawFrom, win) = stripWindow(sel.from)
+    if (win.isEmpty && hasWindow(sel.from)) return None
+    if (appendMode && !win.exists(_.isInstanceOf[Session])) return None
     val keys = sel.groupBy.collect { case ColRef(None, n) => n }
     if (keys.isEmpty || keys.size != sel.groupBy.size) return None
     val (keyItems, aggItems) = sel.items.splitAt(keys.size)
     val keyNames = keyItems.collect { case ItemExpr(ColRef(None, n), None) => n }
     if (keyNames != keys) return None // keys first, groupBy order, unaliased
     val rowAggKinds = Set("COUNT", "SUM", "MIN", "MAX", "AVG")
-    val aggs = aggItems.map {
+    val parsed = aggItems.map {
       case ItemExpr(a @ Agg("COUNT", _, true, _), alias) =>
         Some(StreamOps.RowAgg(alias.getOrElse(Translate.exprName(a)), "count", "*"))
       case ItemExpr(a @ Agg(k, Seq(ColRef(None, c)), false, false), alias) if rowAggKinds(k) =>
         Some(StreamOps.RowAgg(alias.getOrElse(Translate.exprName(a)), k.toLowerCase, c))
       case _ => None
     }
-    if (aggs.contains(None) || aggs.isEmpty) None
-    else Some((keys, aggs.flatten, winSpec))
+    if (parsed.contains(None) || parsed.isEmpty) return None
+    val aggs = parsed.flatten
+    planOf(sel) // full plan-time validation (TypeCheck on the items)
+    val src = planOf(Select(Seq(ItemWildcard(None)), rawFrom, sel.where, Nil, None))
+    val ts = if (src.columns.contains("_ts")) "_ts" else "ts"
+    Some(win match {
+      case None => StreamOps.perRowAggs(src, keys, aggs)
+      case Some(Tumble(i)) => StreamOps.perRowAggsWindowed(src, keys, aggs,
+        ts, Translate.intervalString(i))
+      case Some(Hop(sz, a)) => StreamOps.perRowAggsWindowed(src, keys, aggs,
+        ts, Translate.intervalString(sz), Some(Translate.intervalString(a)))
+      case Some(Session(g)) => StreamOps.perRowAggsSession(src, keys, aggs,
+        ts, Translate.intervalString(g))
+    })
   }
 
   /** Peel a top-level (possibly aliased) window off a from-ref. */

@@ -6,12 +6,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, IntervalUtils}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine facade: streams, continuous queries, and materialized views —
   * the reference's server surface (SURVEY §3) re-expressed on Structured
@@ -318,44 +320,6 @@ class Engine(val spark: SparkSession) {
     * table named `name` (read results via `spark.table(name)`). */
   def emitChanges(name: String, plan: DataFrame): StreamingQuery =
     startQuery(name, plan, "update")
-
-  /** EMIT CHANGES with the reference's per-row cadence: one emission per
-    * input row (GroupedStream.hs:102), not one per micro-batch — the
-    * fidelity opt-in for tests/consumers that need the exact changelog
-    * (README "Accepted divergences"). Covers the unwindowed aggregate set:
-    * running COUNT/SUM/MIN/MAX/AVG per key. */
-  def emitChangesPerRow(name: String, source: DataFrame,
-                        key: String, value: String): StreamingQuery =
-    startQuery(name, StreamOps.perRowAgg(source, key, value), "update")
-
-  /** Per-row EMIT CHANGES over the FULL multi-aggregate SELECT list: any
-    * COUNT/SUM/MIN/MAX/AVG mix over any value columns and composite keys
-    * (see [[StreamOps.perRowAggs]]). */
-  def emitChangesPerRow(name: String, source: DataFrame, keys: Seq[String],
-                        aggs: Seq[StreamOps.RowAgg]): StreamingQuery =
-    startQuery(name, StreamOps.perRowAggs(source, keys, aggs), "update")
-
-  /** Per-row EMIT CHANGES over TUMBLE/HOP windows: per-input-row cadence
-    * with the window folded into the key; state expires by event-time
-    * timeout at window close (see [[StreamOps.perRowAggsWindowed]]). */
-  def emitChangesPerRowWindowed(name: String, source: DataFrame,
-                                keys: Seq[String], aggs: Seq[StreamOps.RowAgg],
-                                ts: String, size: String,
-                                advance: Option[String]): StreamingQuery =
-    startQuery(name,
-      StreamOps.perRowAggsWindowed(source, keys, aggs, ts, size, advance),
-      "update")
-
-  /** Per-row EMIT CHANGES over SESSION windows: per-input-row cadence with
-    * the key's gap-merged open sessions held in state — the update-mode
-    * form of a session aggregate, which the micro-batch path can only
-    * emit append-mode at session close (see
-    * [[StreamOps.perRowAggsSession]]). */
-  def emitChangesPerRowSession(name: String, source: DataFrame,
-                               keys: Seq[String], aggs: Seq[StreamOps.RowAgg],
-                               ts: String, gap: String): StreamingQuery =
-    startQuery(name,
-      StreamOps.perRowAggsSession(source, keys, aggs, ts, gap), "update")
 
   /** CREATE STREAM out AS SELECT (CSAS): append-mode stream→stream query.
     * If `name` is a registered file-backed stream, result partitions write
@@ -813,14 +777,16 @@ class Engine(val spark: SparkSession) {
   /** Storage directory of an append-mode view (tests/diagnostics). */
   private[graft] def appendViewDir(name: String): String = appendViews(name).dir
 
-  /** Interval string → seconds, evaluated by Spark itself (so "1 HOUR",
-    * "90 seconds", … parse exactly as they do in the read path's filter).
-    * Month/year intervals resolve at the epoch — retention is meant for
-    * day-scale backlogs, not calendar arithmetic. */
-  private[graft] def intervalSeconds(d: String): Long =
-    spark.range(1).select(
-      (lit(new java.sql.Timestamp(0L)) + expr(s"INTERVAL $d")).cast("long"))
-      .head().getLong(0)
+  /** Interval string → seconds: the epoch plus the interval in the session
+    * time zone, Spark's own timestamp + interval arithmetic, on the driver
+    * with no job. Month/year intervals resolve at the epoch — retention is
+    * meant for day-scale backlogs, not calendar arithmetic. */
+  private[graft] def intervalSeconds(d: String): Long = {
+    val iv = IntervalUtils.stringToInterval(UTF8String.fromString(d))
+    val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+    Math.floorDiv(DateTimeUtils.timestampAddInterval(
+      0L, iv.months, iv.days, iv.microseconds, zone), 1000000L)
+  }
 
   /** Drop whole expired partition dirs of the existing log `dir` of an
     * append view whose buckets are `s` seconds wide: a bucket covers

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, RelationalGroupedDataset, Row}
+import org.apache.spark.sql.catalyst.util.{IntervalUtils, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming transform combinators: the windowed-aggregation and interval-
   * join surface of the dialect (SURVEY §2.4–§2.6), watermark-correct by
@@ -88,10 +91,17 @@ object StreamOps {
     * units take their maximum length — 31-day months, 366-day years: a
     * WIDER band stays correct, the exact residual still filters). */
   private[graft] def intervalMicros(s: String): Long = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(s))
+    val iv = IntervalUtils.stringToInterval(UTF8String.fromString(s))
     iv.months * 31L * 86400L * 1000000L + iv.days * 86400L * 1000000L +
       iv.microseconds
+  }
+
+  /** Width of a fixed-length interval literal in microseconds (days are
+    * 86,400 s); a month part has no fixed length and is rejected. */
+  private def fixedMicros(s: String, what: String): Long = {
+    val iv = IntervalUtils.stringToInterval(UTF8String.fromString(s))
+    require(iv.months == 0, s"$what must be a fixed duration, got '$s'")
+    iv.days * 86400000000L + iv.microseconds
   }
 
   /** KEYED banded interval join core (r16) — [[bandedKeylessJoin]]'s
@@ -189,8 +199,6 @@ object StreamOps {
                  leftTs: String, rightTs: String,
                  payload: Seq[String],
                  grace: String = DefaultGrace): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
     val leftCols = left.columns.toIndexedSeq
     require(payload.toSet.intersect(leftCols.toSet).isEmpty,
       s"payload columns collide with left: ${payload.toSet.intersect(leftCols.toSet)}")
@@ -301,6 +309,152 @@ object StreamOps {
     * COUNT(*)). */
   final case class RowAgg(name: String, kind: String, input: String)
 
+  /** The accumulator of a whole per-row SELECT list over the projected
+    * `schema`, built once per query — the Spark twin of the reference's
+    * one accumulator object per SELECT list (`composeAggs`,
+    * Codegen/Common.hs:96-119). One slot per aggregate: count → running
+    * count; sum/avg → (sum, n) with the sum in LONG for integral inputs (a
+    * Double accumulator would silently drop low-order bits past 2^53, where
+    * Spark's exact long sum on the non-per-row path would not); min/max →
+    * the input's own value, null until one arrives. Inputs it cannot fold
+    * are rejected here, when the query is planned, not at the first row. */
+  private final class RowAccs(aggs: Seq[RowAgg], schema: StructType)
+      extends Serializable {
+    // select() resolved names case-INSENSITIVELY and the projected schema
+    // carries the source's canonical casing — index the same way, or a key
+    // written as `Lang` over a declared `lang` column would crash
+    def fieldIdx(n: String): Int = {
+      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
+      require(i >= 0, s"column $n not in [${schema.fieldNames.mkString(",")}]")
+      i
+    }
+    private val kinds = aggs.map(_.kind).toArray
+    private val inIdx = aggs.map(a => if (a.input == "*") -1 else fieldIdx(a.input)).toArray
+    private val inType = inIdx.map(i => if (i < 0) NullType else schema(i).dataType)
+    private val integral = inType.map {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    aggs.indices.foreach { i =>
+      def reject(why: String): Nothing = throw new IllegalArgumentException(
+        s"per-row ${kinds(i).toUpperCase}(${aggs(i).input}) AS ${aggs(i).name}: $why")
+      kinds(i) match {
+        case "count" =>
+        case "sum" | "avg" => if (!inType(i).isInstanceOf[NumericType])
+          reject(s"column ${aggs(i).input} is ${inType(i).sql}, not numeric")
+        case "min" | "max" => inType(i) match {
+          case _: NumericType | _: StringType | BooleanType | DateType |
+               TimestampType | TimestampNTZType =>
+          case t => reject(s"column ${aggs(i).input} is ${t.sql}, which has no order")
+        }
+        case k => reject(s"unknown aggregate kind '$k'")
+      }
+    }
+
+    /** Output fields, one per aggregate. COUNT is never null, matching
+      * Spark's own agg schema exactly (the per-row and micro-batch paths
+      * must be flip-compatible); SUM keeps integral inputs integral
+      * (op_add: int+int→int, AggOp.hs:73-81); MIN/MAX keep the input's
+      * type. */
+    val outFields: Seq[StructField] = aggs.indices.map { i =>
+      StructField(aggs(i).name, kinds(i) match {
+        case "count" => LongType
+        case "sum" => if (integral(i)) LongType else DoubleType
+        case "avg" => DoubleType
+        case _ => inType(i)
+      }, nullable = kinds(i) != "count")
+    }
+
+    /** Streaming state of one accumulator: field `a<i>` per aggregate. */
+    val stateSchema: StructType = StructType(aggs.indices.map { i =>
+      StructField(s"a$i", kinds(i) match {
+        case "count" => LongType
+        case "sum" | "avg" => StructType(Seq(
+          StructField("s", if (integral(i)) LongType else DoubleType),
+          StructField("n", LongType)))
+        case _ => inType(i)
+      })
+    })
+
+    // Spark's own order: NaN above every other double and -0.0 = 0.0
+    // (SQLOrderingUtil); boxed integrals compare exactly, never through
+    // doubleValue, which collapses longs that differ only below 2^53
+    private def lt(a: Any, b: Any): Boolean = ((a, b) match {
+      case (x: java.lang.Double, y: java.lang.Double) => SQLOrderingUtil.compareDoubles(x, y)
+      case (x: java.lang.Float, y: java.lang.Float) => SQLOrderingUtil.compareFloats(x, y)
+      case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+    }) < 0
+
+    private def extremum(i: Int, x: Any, y: Any): Any =
+      if (x == null) y else if (y == null) x
+      else if (if (kinds(i) == "min") lt(y, x) else lt(x, y)) y else x
+
+    def init(): Array[Any] = Array.tabulate[Any](kinds.length) { i =>
+      kinds(i) match {
+        case "count" => 0L
+        case "sum" | "avg" => if (integral(i)) (0L, 0L) else (0.0, 0L)
+        case _ => null
+      }
+    }
+
+    def load(s: Row): Array[Any] = Array.tabulate[Any](kinds.length) { i =>
+      kinds(i) match {
+        case "sum" | "avg" =>
+          val r = s.getStruct(i)
+          if (integral(i)) (r.getLong(0), r.getLong(1)) else (r.getDouble(0), r.getLong(1))
+        case _ => s.get(i)
+      }
+    }
+
+    def save(acc: Array[Any]): Row = Row.fromSeq(acc.toSeq.map {
+      case (s, n) => Row(s, n)
+      case v => v
+    })
+
+    def applyRow(acc: Array[Any], r: Row): Unit = kinds.indices.foreach { i =>
+      val v = if (inIdx(i) < 0) null else r.get(inIdx(i))
+      kinds(i) match {
+        case "count" => // COUNT(*) counts rows; COUNT(e) skips NULLs
+          if (inIdx(i) < 0 || v != null) acc(i) = acc(i).asInstanceOf[Long] + 1L
+        case "sum" | "avg" => if (v != null) acc(i) = acc(i) match {
+          case (s: Long, n: Long) => (s + v.asInstanceOf[java.lang.Number].longValue, n + 1L)
+          case (s: Double, n: Long) => (s + v.asInstanceOf[java.lang.Number].doubleValue, n + 1L)
+        }
+        case _ => acc(i) = extremum(i, acc(i), v)
+      }
+    }
+
+    /** Two accumulators folded into one — the mergeable shapes Spark's own
+      * partial aggregation relies on. */
+    def merge(x: Array[Any], y: Array[Any]): Array[Any] =
+      Array.tabulate[Any](kinds.length) { i =>
+        (kinds(i), x(i), y(i)) match {
+          case ("count", a: Long, b: Long) => a + b
+          case (_, (s1: Long, n1: Long), (s2: Long, n2: Long)) => (s1 + s2, n1 + n2)
+          case (_, (s1: Double, n1: Long), (s2: Double, n2: Long)) => (s1 + s2, n1 + n2)
+          case (_, a, b) => extremum(i, a, b)
+        }
+      }
+
+    def emit(acc: Array[Any]): Seq[Any] = kinds.indices.map { i =>
+      (kinds(i), acc(i)) match {
+        case ("sum" | "avg", (_, 0L)) => null
+        case ("sum", (s, _)) => s
+        case ("avg", (s: Long, n: Long)) => s.toDouble / n
+        case ("avg", (s: Double, n: Long)) => s / n
+        case (_, v) => v // count, min/max
+      }
+    }
+  }
+
+  private def inputCols(aggs: Seq[RowAgg]): Seq[String] =
+    aggs.map(_.input).filter(_ != "*").distinct
+
+  /** `proj` grouped by the columns at `keyIdx`, each group key one Row. */
+  private def groupRows(proj: DataFrame, keyIdx: Seq[Int]) =
+    proj.groupByKey((r: Row) => Row.fromSeq(keyIdx.map(r.get)))(
+      Encoders.row(StructType(keyIdx.map(proj.schema(_)))))
+
   /** Per-row emission for unwindowed aggregation: ONE output row per INPUT
     * row, carrying the running aggregates — the reference's exact EMIT
     * CHANGES cadence (every input re-emits the updated accumulator,
@@ -310,16 +464,13 @@ object StreamOps {
     * Takes the FULL multi-aggregate SELECT list: any number of
     * COUNT/SUM/MIN/MAX/AVG over any mix of value columns (numeric, string,
     * timestamp — MIN/MAX keep the input's type), over composite keys. The
-    * per-key state is one Row holding every accumulator — the Spark twin of
-    * the reference's one-accumulator-object `composeAggs`
-    * (Codegen/Common.hs:96-119). Built on flatMapGroupsWithState: state is
-    * partitioned across executors like any streaming agg — per-row fidelity
-    * costs emission volume, not driver memory. */
+    * per-key state is one Row holding every accumulator ([[RowAccs]]).
+    * Built on flatMapGroupsWithState: state is partitioned across
+    * executors like any streaming agg — per-row fidelity costs emission
+    * volume, not driver memory. */
   def perRowAggs(df: DataFrame, keys: Seq[String], aggs: Seq[RowAgg],
                  timeoutOn: Option[String] = None,
                  carry: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
     // timeoutOn: a TIMESTAMP key column (e.g. window_end) — when the
     // WATERMARK passes a group's value, its state is dropped (the windowed
     // form would otherwise accrete one state entry per window forever).
@@ -329,71 +480,16 @@ object StreamOps {
       require(i >= 0, s"timeout column $c must be one of the keys $keys")
       i
     }
-    val inputCols = aggs.map(_.input).filter(_ != "*").distinct
     // carry: columns kept in the projection without participating in the
     // key or any accumulator — the windowed form must keep the original
     // WATERMARKED event-time column visible to the analyzer (extracting
     // window.start drops the watermark tag, and EventTimeTimeout's checker
     // requires a tagged column below the flatMapGroupsWithState)
-    val proj = df.select((keys ++ inputCols ++ carry).distinct.map(col): _*)
-    val schema = proj.schema
-    // select() above resolved names case-INSENSITIVELY and the projected
-    // schema carries the source's canonical casing — index the same way,
-    // or a key written as `Lang` over a declared `lang` column would crash
-    def fieldIdx(n: String): Int = {
-      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-      require(i >= 0, s"column $n not in [${schema.fieldNames.mkString(",")}]")
-      i
-    }
-    val keyIdx = keys.map(fieldIdx)
-    val inIdx = aggs.map(a => if (a.input == "*") -1 else fieldIdx(a.input))
-    def inType(a: RowAgg): DataType = schema(fieldIdx(a.input)).dataType
-    def integral(a: RowAgg): Boolean = inType(a) match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val outSchema = StructType(
-      keys.map(k => schema(fieldIdx(k))) ++ aggs.map { a =>
-        StructField(a.name, a.kind match {
-          case "count" => LongType
-          // SUM keeps int for int inputs (op_add: int+int→int, AggOp.hs:73-81)
-          case "sum" => if (integral(a)) LongType else DoubleType
-          case "avg" => DoubleType
-          case "min" | "max" => inType(a)
-          // COUNT is never null — matching Spark's own agg schema exactly
-          // (the per-row and micro-batch paths must be flip-compatible)
-        }, nullable = a.kind != "count")
-      })
-    // accumulator slots: count → running count; sum/avg → (sum, n) with
-    // the sum in LONG for integral inputs — a Double accumulator would
-    // silently drop low-order bits past 2^53, where Spark's exact long sum
-    // (the non-per-row path) would not; min/max → input's own type
-    val stateSchema = StructType(aggs.zipWithIndex.map { case (a, i) =>
-      StructField(s"a$i", a.kind match {
-        case "count" => LongType
-        case "sum" | "avg" => StructType(Seq(
-          StructField("s", if (integral(a)) LongType else DoubleType),
-          StructField("n", LongType)))
-        case "min" | "max" => inType(a)
-      })
-    })
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      // exact integral compares FIRST: doubleValue collapses longs that
-      // differ only below 2^53
-      case (x: java.lang.Long, y: java.lang.Long) => x.longValue < y.longValue
-      case (x: java.lang.Integer, y: java.lang.Integer) => x.intValue < y.intValue
-      case (x: java.lang.Number, y: java.lang.Number) => x.doubleValue < y.doubleValue
-      case (x: String, y: String) => x < y
-      case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.before(y)
-      case (x: java.sql.Date, y: java.sql.Date) => x.before(y)
-      case (x: java.lang.Boolean, y: java.lang.Boolean) => !x && y
-      case _ => throw new IllegalArgumentException(s"unorderable: $a / $b")
-    }
-    def num(v: Any): Double = v.asInstanceOf[java.lang.Number].doubleValue
-    val keyEnc = Encoders.row(StructType(keyIdx.map(schema(_))))
-    val stateEnc = Encoders.row(stateSchema)
-    val outEnc = Encoders.row(outSchema)
-    proj.groupByKey((r: Row) => Row.fromSeq(keyIdx.map(r.get)))(keyEnc)
+    val proj = df.select((keys ++ inputCols(aggs) ++ carry).distinct.map(col): _*)
+    val accs = new RowAccs(aggs, proj.schema)
+    val keyIdx = keys.map(accs.fieldIdx)
+    val outSchema = StructType(keyIdx.map(proj.schema(_)) ++ accs.outFields)
+    groupRows(proj, keyIdx)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update(),
         if (timeoutKeyIdx.isDefined) GroupStateTimeout.EventTimeTimeout
@@ -413,68 +509,23 @@ object StreamOps {
             // the accumulators from zero and emit wrong partial values
             Iterator.empty
           } else {
-          val acc: Array[Any] = state.getOption match {
-            case Some(s) => Array.tabulate(aggs.size) { i =>
-              aggs(i).kind match {
-                case "sum" | "avg" =>
-                  val r = s.getStruct(i)
-                  if (integral(aggs(i))) (r.getLong(0), r.getLong(1))
-                  else (r.getDouble(0), r.getLong(1))
-                case _ => s.get(i)
-              }
+            val acc = state.getOption.fold(accs.init())(accs.load)
+            val emissions = rows.map { r =>
+              accs.applyRow(acc, r)
+              Row.fromSeq(k.toSeq ++ accs.emit(acc))
+            }.toVector // materialize BEFORE state.update sees the final acc
+            state.update(accs.save(acc))
+            timeoutKeyIdx.foreach { ti =>
+              // fire when the watermark passes the group's anchor; a group
+              // already at/behind the watermark (edge of lateness) must
+              // still set a LEGAL timestamp (> watermark), hence the clamp
+              val anchor = k.getAs[java.sql.Timestamp](ti).getTime
+              state.setTimeoutTimestamp(
+                math.max(anchor, state.getCurrentWatermarkMs() + 1))
             }
-            case None => aggs.map(a => a.kind match {
-              case "count" => 0L
-              case "sum" | "avg" => if (integral(a)) (0L, 0L) else (0.0, 0L)
-              case _ => null
-            }).toArray[Any]
+            emissions.iterator
           }
-          def emitted: Row = Row.fromSeq(k.toSeq ++ aggs.indices.map { i =>
-            (aggs(i).kind, acc(i)) match {
-              case ("count", c) => c
-              case ("sum", (s: Long, n: Long)) => if (n == 0) null else s
-              case ("sum", (s: Double, n: Long)) => if (n == 0) null else s
-              case ("avg", (s: Long, n: Long)) => if (n == 0) null else s.toDouble / n
-              case ("avg", (s: Double, n: Long)) => if (n == 0) null else s / n
-              case (_, v) => v // min/max (null until a value arrives)
-            }
-          })
-          val emissions = rows.map { r =>
-            aggs.indices.foreach { i =>
-              val v = if (inIdx(i) < 0) null else r.get(inIdx(i))
-              aggs(i).kind match {
-                case "count" => // COUNT(*) counts rows; COUNT(e) skips NULLs
-                  if (inIdx(i) < 0 || v != null)
-                    acc(i) = acc(i).asInstanceOf[Long] + 1L
-                case "sum" | "avg" => if (v != null) acc(i) match {
-                  case (s: Long, n: Long) =>
-                    acc(i) = (s + v.asInstanceOf[java.lang.Number].longValue, n + 1L)
-                  case (s: Double, n: Long) => acc(i) = (s + num(v), n + 1L)
-                }
-                case "min" => if (v != null && (acc(i) == null || lt(v, acc(i)))) acc(i) = v
-                case "max" => if (v != null && (acc(i) == null || lt(acc(i), v))) acc(i) = v
-              }
-            }
-            emitted
-          }.toVector // materialize BEFORE state.update sees the final acc
-          state.update(Row.fromSeq(aggs.indices.map { i =>
-            acc(i) match {
-              case (s, n: Long) if aggs(i).kind == "sum" || aggs(i).kind == "avg" =>
-                Row(s, n)
-              case v => v
-            }
-          }))
-          timeoutKeyIdx.foreach { ti =>
-            // fire when the watermark passes the group's anchor; a group
-            // already at/behind the watermark (edge of lateness) must still
-            // set a LEGAL timestamp (> watermark), hence the clamp
-            val anchor = k.getAs[java.sql.Timestamp](ti).getTime
-            state.setTimeoutTimestamp(
-              math.max(anchor, state.getCurrentWatermarkMs() + 1))
-          }
-          emissions.iterator
-          }
-      }(stateEnc, outEnc)
+      }(Encoders.row(accs.stateSchema), Encoders.row(outSchema))
       .toDF((keys ++ aggs.map(_.name)): _*)
   }
 
@@ -508,49 +559,29 @@ object StreamOps {
         Seq(col("window_start"), col("window_end")): _*)
   }
 
-  /** "30 minutes"-style duration → milliseconds (session-gap state math
-    * needs a plain long; Spark's own interval parser lives behind catalyst
-    * internals). */
-  private[streaming] def parseDurationMs(d: String): Long = {
-    val Pat = "(\\d+)\\s*(millisecond|second|minute|hour|day)s?".r
-    d.trim.toLowerCase match {
-      case Pat(n, u) => n.toLong * (u match {
-        case "millisecond" => 1L
-        case "second" => 1000L
-        case "minute" => 60000L
-        case "hour" => 3600000L
-        case "day" => 86400000L
-      })
-      case other => throw new IllegalArgumentException(s"bad duration: $other")
-    }
-  }
-
   /** Per-row EMIT CHANGES over SESSION windows (gap-merged): per-input-row
     * cadence where the stateful key is the GROUP BY keys ONLY — unlike
     * TUMBLE/HOP the window identity is fluid (sessions extend and MERGE as
     * rows arrive, SessionWindowedStream.hs:93-138), so the key's open
     * sessions (start, end, accumulators) live in the state VALUE. A row at
     * t claims [t, t+gap); every open session it overlaps merges into one
-    * (min start / max end / accumulator merge — count/sum/avg add, min/max
-    * fold — the same mergeable shapes Spark's own partial aggregation
-    * relies on), the row's values apply, and ONE row emits carrying the
-    * merged session's current bounds. Boundary math is exactly Spark's
-    * session_window (end = last event + gap), so the final per-session
-    * emission agrees with the micro-batch groupBy(session_window) result
-    * row-for-row (pinned in StreamingTwinSpec). Sessions whose end the
-    * watermark passes drop via event-time timeout — their last per-row
-    * emission already carried their final state; rows behind the watermark
-    * drop, matching the windowed-agg late rule. State per key is O(open
-    * sessions), the same bound Spark's session state store keeps. */
+    * (min start / max end / [[RowAccs.merge]]), the row's values apply,
+    * and ONE row emits carrying the merged session's current bounds.
+    * Boundary math is exactly Spark's session_window (end = last event +
+    * gap), so the final per-session emission agrees with the micro-batch
+    * groupBy(session_window) result row-for-row (pinned in
+    * StreamingTwinSpec). Sessions whose end the watermark passes drop via
+    * event-time timeout — their last per-row emission already carried
+    * their final state; rows behind the watermark drop, matching the
+    * windowed-agg late rule. State per key is O(open sessions), the same
+    * bound Spark's session state store keeps. */
   def perRowAggsSession(df: DataFrame, keys: Seq[String], aggs: Seq[RowAgg],
                         ts: String, gap: String,
                         grace: String = DefaultGrace): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
     // all session arithmetic runs in MICROSECONDS — TimestampType's own
     // precision; millisecond math would shear boundaries off Spark's
     // session_window results (end = last event + gap, µs-exact)
-    val gapUs = parseDurationMs(gap) * 1000L
+    val gapUs = fixedMicros(gap, "session gap")
     def tsToUs(t: java.sql.Timestamp): Long =
       t.getTime / 1000 * 1000000L + t.getNanos / 1000
     def usToTs(us: Long): java.sql.Timestamp = {
@@ -558,122 +589,18 @@ object StreamOps {
       t.setNanos(((us % 1000000L) * 1000L).toInt)
       t
     }
-    val inputCols = aggs.map(_.input).filter(_ != "*").distinct
     val proj = df.withWatermark(ts, grace)
-      .select((keys ++ inputCols ++ Seq(ts)).distinct.map(col): _*)
-    val schema = proj.schema
-    def fieldIdx(n: String): Int = {
-      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(n))
-      require(i >= 0, s"column $n not in [${schema.fieldNames.mkString(",")}]")
-      i
-    }
-    val keyIdx = keys.map(fieldIdx)
-    val tsIdx = fieldIdx(ts)
-    val inIdx = aggs.map(a => if (a.input == "*") -1 else fieldIdx(a.input))
-    def inType(a: RowAgg): DataType = schema(fieldIdx(a.input)).dataType
-    def integral(a: RowAgg): Boolean = inType(a) match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val outSchema = StructType(
-      keys.map(k => schema(fieldIdx(k))) ++ aggs.map { a =>
-        StructField(a.name, a.kind match {
-          case "count" => LongType
-          case "sum" => if (integral(a)) LongType else DoubleType
-          case "avg" => DoubleType
-          case "min" | "max" => inType(a)
-        }, nullable = a.kind != "count")
-      } ++ Seq(StructField("window_start", TimestampType, nullable = false),
+      .select((keys ++ inputCols(aggs) ++ Seq(ts)).distinct.map(col): _*)
+    val accs = new RowAccs(aggs, proj.schema)
+    val keyIdx = keys.map(accs.fieldIdx)
+    val tsIdx = accs.fieldIdx(ts)
+    val outSchema = StructType(keyIdx.map(proj.schema(_)) ++ accs.outFields ++
+      Seq(StructField("window_start", TimestampType, nullable = false),
         StructField("window_end", TimestampType, nullable = false)))
-    val accSchema = StructType(aggs.zipWithIndex.map { case (a, i) =>
-      StructField(s"a$i", a.kind match {
-        case "count" => LongType
-        case "sum" | "avg" => StructType(Seq(
-          StructField("s", if (integral(a)) LongType else DoubleType),
-          StructField("n", LongType)))
-        case "min" | "max" => inType(a)
-      })
-    })
     val stateSchema = StructType(Seq(StructField("sessions", ArrayType(
       StructType(Seq(StructField("start", LongType),
-        StructField("end", LongType), StructField("accs", accSchema)))))))
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Long, y: java.lang.Long) => x.longValue < y.longValue
-      case (x: java.lang.Integer, y: java.lang.Integer) => x.intValue < y.intValue
-      case (x: java.lang.Number, y: java.lang.Number) => x.doubleValue < y.doubleValue
-      case (x: String, y: String) => x < y
-      case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.before(y)
-      case (x: java.sql.Date, y: java.sql.Date) => x.before(y)
-      case (x: java.lang.Boolean, y: java.lang.Boolean) => !x && y
-      case _ => throw new IllegalArgumentException(s"unorderable: $a / $b")
-    }
-    def num(v: Any): Double = v.asInstanceOf[java.lang.Number].doubleValue
-    def initAccs(): Array[Any] = aggs.map(a => a.kind match {
-      case "count" => 0L
-      case "sum" | "avg" => if (integral(a)) (0L, 0L) else (0.0, 0L)
-      case _ => null
-    }).toArray[Any]
-    def loadAccs(s: Row): Array[Any] = Array.tabulate(aggs.size) { i =>
-      aggs(i).kind match {
-        case "sum" | "avg" =>
-          val r = s.getStruct(i)
-          if (integral(aggs(i))) (r.getLong(0), r.getLong(1))
-          else (r.getDouble(0), r.getLong(1))
-        case _ => s.get(i)
-      }
-    }
-    def saveAccs(acc: Array[Any]): Row = Row.fromSeq(aggs.indices.map { i =>
-      acc(i) match {
-        case (s, n: Long) if aggs(i).kind == "sum" || aggs(i).kind == "avg" =>
-          Row(s, n)
-        case v => v
-      }
-    })
-    def mergeAccs(x: Array[Any], y: Array[Any]): Array[Any] =
-      Array.tabulate(aggs.size) { i =>
-        aggs(i).kind match {
-          case "count" => x(i).asInstanceOf[Long] + y(i).asInstanceOf[Long]
-          case "sum" | "avg" => (x(i), y(i)) match {
-            case ((s1: Long, n1: Long), (s2: Long, n2: Long)) => (s1 + s2, n1 + n2)
-            case ((s1: Double, n1: Long), (s2: Double, n2: Long)) => (s1 + s2, n1 + n2)
-            case other => throw new IllegalStateException(s"acc shape: $other")
-          }
-          case "min" =>
-            if (x(i) == null) y(i) else if (y(i) == null) x(i)
-            else if (lt(y(i), x(i))) y(i) else x(i)
-          case "max" =>
-            if (x(i) == null) y(i) else if (y(i) == null) x(i)
-            else if (lt(x(i), y(i))) y(i) else x(i)
-        }
-      }
-    def applyRow(acc: Array[Any], r: Row): Unit = aggs.indices.foreach { i =>
-      val v = if (inIdx(i) < 0) null else r.get(inIdx(i))
-      aggs(i).kind match {
-        case "count" =>
-          if (inIdx(i) < 0 || v != null) acc(i) = acc(i).asInstanceOf[Long] + 1L
-        case "sum" | "avg" => if (v != null) acc(i) match {
-          case (s: Long, n: Long) =>
-            acc(i) = (s + v.asInstanceOf[java.lang.Number].longValue, n + 1L)
-          case (s: Double, n: Long) => acc(i) = (s + num(v), n + 1L)
-        }
-        case "min" => if (v != null && (acc(i) == null || lt(v, acc(i)))) acc(i) = v
-        case "max" => if (v != null && (acc(i) == null || lt(acc(i), v))) acc(i) = v
-      }
-    }
-    def emitVals(acc: Array[Any]): Seq[Any] = aggs.indices.map { i =>
-      (aggs(i).kind, acc(i)) match {
-        case ("count", c) => c
-        case ("sum", (s: Long, n: Long)) => if (n == 0) null else s
-        case ("sum", (s: Double, n: Long)) => if (n == 0) null else s
-        case ("avg", (s: Long, n: Long)) => if (n == 0) null else s.toDouble / n
-        case ("avg", (s: Double, n: Long)) => if (n == 0) null else s / n
-        case (_, v) => v
-      }
-    }
-    val keyEnc = Encoders.row(StructType(keyIdx.map(schema(_))))
-    val stateEnc = Encoders.row(stateSchema)
-    val outEnc = Encoders.row(outSchema)
-    proj.groupByKey((r: Row) => Row.fromSeq(keyIdx.map(r.get)))(keyEnc)
+        StructField("end", LongType), StructField("accs", accs.stateSchema)))))))
+    groupRows(proj, keyIdx)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update(), GroupStateTimeout.EventTimeTimeout) {
         (k: Row, rows: Iterator[Row], state: GroupState[Row]) =>
@@ -682,7 +609,7 @@ object StreamOps {
           // final per-row emission already happened)
           var sessions: Vector[(Long, Long, Array[Any])] =
             state.getOption.map(_.getSeq[Row](0).iterator.map(s =>
-              (s.getLong(0), s.getLong(1), loadAccs(s.getStruct(2))))
+              (s.getLong(0), s.getLong(1), accs.load(s.getStruct(2))))
               .filter(_._2 > wmUs).toVector)
               .getOrElse(Vector.empty)
           val out = Vector.newBuilder[Row]
@@ -695,13 +622,13 @@ object StreamOps {
                   val claimEnd = t + gapUs
                   val (hit, miss) = sessions.partition(s =>
                     t < s._2 && s._1 < claimEnd)
-                  val seed = (t, claimEnd, initAccs())
+                  val seed = (t, claimEnd, accs.init())
                   val m = (hit :+ seed).reduce((a, b) =>
                     (math.min(a._1, b._1), math.max(a._2, b._2),
-                      mergeAccs(a._3, b._3)))
-                  applyRow(m._3, r)
+                      accs.merge(a._3, b._3)))
+                  accs.applyRow(m._3, r)
                   sessions = miss :+ m
-                  out += Row.fromSeq(k.toSeq ++ emitVals(m._3) ++ Seq(
+                  out += Row.fromSeq(k.toSeq ++ accs.emit(m._3) ++ Seq(
                     usToTs(m._1), usToTs(m._2)))
                 }
               }
@@ -709,7 +636,7 @@ object StreamOps {
           if (sessions.isEmpty) state.remove()
           else {
             state.update(Row(sessions.sortBy(_._1).map(s =>
-              Row(s._1, s._2, saveAccs(s._3)))))
+              Row(s._1, s._2, accs.save(s._3)))))
             // wake when the watermark passes the earliest open session end
             // (ceil µs→ms so the timer can't fire a hair before the close)
             state.setTimeoutTimestamp(math.max(
@@ -717,19 +644,9 @@ object StreamOps {
               state.getCurrentWatermarkMs() + 1))
           }
           out.result().iterator
-      }(stateEnc, outEnc)
+      }(Encoders.row(stateSchema), Encoders.row(outSchema))
       .toDF((keys ++ aggs.map(_.name) ++ Seq("window_start", "window_end")): _*)
   }
-
-  /** The single-key single-value convenience form: running
-    * COUNT/SUM/MIN/MAX/AVG of one numeric column. */
-  def perRowAgg(df: DataFrame, key: String, value: String): DataFrame =
-    perRowAggs(
-      df.select(col(key).cast("string").as(key), col(value).cast("double").as(value)),
-      Seq(key),
-      Seq(RowAgg("cnt", "count", "*"), RowAgg("sum", "sum", value),
-        RowAgg("min", "min", value), RowAgg("max", "max", value),
-        RowAgg("avg", "avg", value)))
 
   /** Streaming exact dedup with bounded state: first-seen row per key wins;
     * state for keys older than the watermark is dropped. The streaming form
@@ -843,8 +760,6 @@ object StreamOps {
     * Output: (key, cohort_day DATE, day_offset). */
   def retention(events: DataFrame, key: String, ts: String,
                 grace: String = DefaultGrace): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
     val dayMicros = 86400000000L
     def micros(t: java.sql.Timestamp): Long =
       t.getTime / 1000 * 1000000L + t.getNanos / 1000
@@ -933,14 +848,7 @@ object StreamOps {
   def funnel(events: DataFrame, key: String, typeCol: String, ts: String,
              steps: Seq[String], stepWindow: String = DefaultGrace,
              grace: String = DefaultGrace): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val winMicros = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-        .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(stepWindow))
-      require(iv.months == 0, "funnel stepWindow must be a fixed duration")
-      iv.days * 86400000000L + iv.microseconds
-    }
+    val winMicros = fixedMicros(stepWindow, "funnel stepWindow")
     def micros(t: java.sql.Timestamp): Long =
       t.getTime / 1000 * 1000000L + t.getNanos / 1000
     val n = steps.length

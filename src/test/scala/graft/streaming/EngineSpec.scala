@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -517,7 +519,12 @@ class EngineSpec extends SparkSpec {
   test("per-row EMIT CHANGES opt-in: one emission per input row (GroupedStream.hs:102)") {
     val e = newEngine
     e.createStream("s17", schema)
-    e.emitChangesPerRow("out17", e.df("s17"), "k", "v")
+    e.emitChanges("out17", StreamOps.perRowAggs(
+      e.df("s17").select(col("k").cast("string").as("k"), col("v").cast("double").as("v")),
+      Seq("k"),
+      Seq(StreamOps.RowAgg("cnt", "count", "*"), StreamOps.RowAgg("sum", "sum", "v"),
+        StreamOps.RowAgg("min", "min", "v"), StreamOps.RowAgg("max", "max", "v"),
+        StreamOps.RowAgg("avg", "avg", "v"))))
     // three same-key rows in ONE micro-batch: update-mode groupBy would
     // coalesce them into one emission; the per-row path must emit three
     e.insert("s17", rec("a", 1, "2024-01-01 00:00:00"),
@@ -539,39 +546,64 @@ class EngineSpec extends SparkSpec {
     e.terminate("out17"); e.dropStream("s17")
   }
 
+  /** The per-row forms over one SELECT list keyed by `k`, each reading its
+    * own stream (a memory stream serves one reader): unwindowed into
+    * `out<n>`, TUMBLE into `out<n>w` and SESSION into `out<n>s`, with a
+    * one-hour window and gap that hold every row of a test. Returns the
+    * (stream, sink) pairs; a sink's key and aggregate columns come first. */
+  private def perRowForms(e: Engine, n: Int, sch: StructType,
+                          aggs: Seq[StreamOps.RowAgg]): Seq[(String, String)] =
+    Seq[(String, DataFrame => DataFrame)](
+      "" -> (StreamOps.perRowAggs(_, Seq("k"), aggs)),
+      "w" -> (StreamOps.perRowAggsWindowed(_, Seq("k"), aggs, "_ts", "1 hour")),
+      "s" -> (StreamOps.perRowAggsSession(_, Seq("k"), aggs, "_ts", "1 hour"))
+    ).map { case (form, plan) =>
+      e.createStream(s"s$n$form", sch)
+      e.emitChanges(s"out$n$form", plan(e.df(s"s$n$form")))
+      (s"s$n$form", s"out$n$form")
+    }
+
   test("per-row EMIT CHANGES over a full multi-agg SELECT list (two values + string agg)") {
     val e = newEngine
     val sch = StructType(Seq(
       StructField("k", StringType), StructField("v", LongType),
       StructField("w", DoubleType), StructField("s", StringType),
       StructField("_ts", TimestampType)))
-    e.createStream("s18", sch)
     def r18(k: String, v: Long, w: Double, s: String, ts: String) =
       s"""{"k":"$k","v":$v,"w":$w,"s":"$s","_ts":"$ts"}"""
     // SELECT COUNT(*), SUM(v), AVG(w), MAX(s), MIN(v) — two numeric value
-    // columns and a STRING aggregate, one Row-encoded accumulator per key
-    e.emitChangesPerRow("out18", e.df("s18"), Seq("k"), Seq(
+    // columns and a STRING aggregate, one Row-encoded accumulator per key;
+    // the same inputs run through the unwindowed, TUMBLE and SESSION forms
+    val forms = perRowForms(e, 18, sch, Seq(
       StreamOps.RowAgg("cnt", "count", "*"),
       StreamOps.RowAgg("sv", "sum", "v"),
       StreamOps.RowAgg("aw", "avg", "w"),
       StreamOps.RowAgg("mxs", "max", "s"),
       StreamOps.RowAgg("mnv", "min", "v")))
+    def emitted(out: String) = spark.table(out).collect().filter(_.getString(0) == "a")
+      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3), r.getString(4), r.getLong(5)))
     // three same-key rows in one micro-batch → three emissions
-    e.insert("s18", r18("a", 1, 2.0, "pear", "2024-01-01 00:00:00"),
-      r18("a", 5, 4.0, "apple", "2024-01-01 00:00:01"),
-      r18("a", 3, 6.0, "plum", "2024-01-01 00:00:02"))
+    forms.foreach { case (s, _) =>
+      e.insert(s, r18("a", 1, 2.0, "pear", "2024-01-01 00:00:00"),
+        r18("a", 5, 4.0, "apple", "2024-01-01 00:00:01"),
+        r18("a", 3, 6.0, "plum", "2024-01-01 00:00:02"))
+    }
     e.processAll()
-    val rows = spark.table("out18").collect().filter(_.getString(0) == "a")
-      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3), r.getString(4), r.getLong(5)))
-    assert(rows.map(_._1).toSeq == Seq(1L, 2L, 3L), s"cadence: ${rows.toSeq}")
-    assert(rows.last == (3L, 9L, 4.0, "plum", 1L), s"final acc: ${rows.last}")
+    forms.foreach { case (_, out) =>
+      val rows = emitted(out)
+      assert(rows.map(_._1).toSeq == Seq(1L, 2L, 3L), s"$out cadence: ${rows.toSeq}")
+      assert(rows.last == (3L, 9L, 4.0, "plum", 1L), s"$out final acc: ${rows.last}")
+    }
     // state persists across batches, string extremum updates correctly
-    e.insert("s18", r18("a", 7, 8.0, "zebra", "2024-01-01 00:00:03"))
+    forms.foreach { case (s, _) =>
+      e.insert(s, r18("a", 7, 8.0, "zebra", "2024-01-01 00:00:03"))
+    }
     e.processAll()
-    val all = spark.table("out18").collect().filter(_.getString(0) == "a")
-      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3), r.getString(4), r.getLong(5)))
-    assert(all.last == (4L, 16L, 5.0, "zebra", 1L), s"after batch 2: ${all.toSeq}")
-    e.terminate("out18"); e.dropStream("s18")
+    forms.foreach { case (s, out) =>
+      val all = emitted(out)
+      assert(all.last == (4L, 16L, 5.0, "zebra", 1L), s"$out after batch 2: ${all.toSeq}")
+      e.terminate(out); e.dropStream(s)
+    }
   }
 
   test("per-row integral SUM/MIN stay exact past 2^53 (long accumulator, not double)") {
@@ -579,21 +611,118 @@ class EngineSpec extends SparkSpec {
     val sch = StructType(Seq(
       StructField("k", StringType), StructField("v", LongType),
       StructField("_ts", TimestampType)))
-    e.createStream("s19", sch)
     val big = (1L << 53) + 1L // indistinguishable from 2^53 in a Double
-    e.emitChangesPerRow("out19", e.df("s19"), Seq("k"), Seq(
+    val forms = perRowForms(e, 19, sch, Seq(
       StreamOps.RowAgg("sv", "sum", "v"), StreamOps.RowAgg("mn", "min", "v")))
-    e.insert("s19",
-      s"""{"k":"a","v":$big,"_ts":"2024-01-01 00:00:00"}""",
-      s"""{"k":"a","v":3,"_ts":"2024-01-01 00:00:01"}""",
-      s"""{"k":"a","v":${big - 1L},"_ts":"2024-01-01 00:00:02"}""")
+    forms.foreach { case (s, _) =>
+      e.insert(s,
+        s"""{"k":"a","v":$big,"_ts":"2024-01-01 00:00:00"}""",
+        s"""{"k":"a","v":3,"_ts":"2024-01-01 00:00:01"}""",
+        s"""{"k":"a","v":${big - 1L},"_ts":"2024-01-01 00:00:02"}""")
+    }
     e.processAll()
-    val last = spark.table("out19").collect().filter(_.getString(0) == "a").last
-    // double accumulation would report sum = 2^54+3 ± drop the low bit and
-    // min(big, big-1) could tie via doubleValue — both must be exact
-    assert(last.getLong(1) == big + 3L + (big - 1L), s"sum drifted: $last")
-    assert(last.getLong(2) == 3L)
-    e.terminate("out19"); e.dropStream("s19")
+    forms.foreach { case (s, out) =>
+      val last = spark.table(out).collect().filter(_.getString(0) == "a").last
+      // double accumulation would report sum = 2^54+3 ± drop the low bit and
+      // min(big, big-1) could tie via doubleValue — both must be exact
+      assert(last.getLong(1) == big + 3L + (big - 1L), s"$out sum drifted: $last")
+      assert(last.getLong(2) == 3L, s"$out min: $last")
+      e.terminate(out); e.dropStream(s)
+    }
+  }
+
+  test("per-row MIN/MAX order doubles as Spark does (NaN largest): final states twin a batch groupBy") {
+    val e = newEngine
+    val sch = StructType(Seq(
+      StructField("k", StringType), StructField("v", DoubleType),
+      StructField("_ts", TimestampType)))
+    // each key sees NaN on one side of 1.0: a `<` over doubles keeps the
+    // first value it sees for one of MIN/MAX, whatever the row order
+    val recs = Seq(("a", "1.0", "00"), ("a", "NaN", "01"), ("b", "NaN", "00"), ("b", "1.0", "01"))
+      .map { case (k, v, s) => s"""{"k":"$k","v":$v,"_ts":"2024-01-01 00:00:$s"}""" }
+    val forms = perRowForms(e, 20, sch, Seq(StreamOps.RowAgg("n", "count", "*"),
+      StreamOps.RowAgg("mn", "min", "v"), StreamOps.RowAgg("mx", "max", "v")))
+    forms.foreach { case (s, _) => e.insert(s, recs: _*) }
+    e.processAll()
+    // Double NaN != NaN: compare the rendered values
+    val batch = spark.read.schema(sch)
+      .json(spark.createDataset(recs)(Encoders.STRING))
+      .groupBy("k").agg(min("v"), max("v")).collect()
+      .map(r => (r.getString(0), r.getDouble(1).toString, r.getDouble(2).toString)).toSet
+    assert(batch == Set(("a", "1.0", "NaN"), ("b", "1.0", "NaN")), s"batch: $batch")
+    forms.foreach { case (s, out) =>
+      val finals = spark.table(out).collect().groupBy(_.getString(0)).values
+        .map(_.maxBy(_.getLong(1)))
+        .map(r => (r.getString(0), r.getDouble(2).toString, r.getDouble(3).toString)).toSet
+      assert(finals == batch, s"$out per-row finals $finals vs batch $batch")
+      e.terminate(out); e.dropStream(s)
+    }
+  }
+
+  test("per-row aggregates the accumulator cannot fold are rejected when the query is planned") {
+    val df = spark.range(1).selectExpr("'a' AS k", "'x' AS s", "binary('b') AS b",
+      "array(1) AS arr", "map(1, 1) AS m", "named_struct('f', 1) AS st",
+      "timestamp'2024-01-01 00:00:00' AS _ts")
+    val forms = Seq[(DataFrame, Seq[StreamOps.RowAgg]) => Any](
+      StreamOps.perRowAggs(_, Seq("k"), _),
+      StreamOps.perRowAggsWindowed(_, Seq("k"), _, "_ts", "1 hour"),
+      StreamOps.perRowAggsSession(_, Seq("k"), _, "_ts", "1 hour"))
+    for {
+      agg <- Seq(StreamOps.RowAgg("x", "median", "s"), StreamOps.RowAgg("x", "sum", "s"),
+        StreamOps.RowAgg("x", "avg", "s"), StreamOps.RowAgg("x", "min", "b"),
+        StreamOps.RowAgg("x", "max", "arr"), StreamOps.RowAgg("x", "min", "m"),
+        StreamOps.RowAgg("x", "max", "st"))
+      form <- forms
+    } {
+      val err = intercept[IllegalArgumentException](
+        form(df, Seq(StreamOps.RowAgg("n", "count", "*"), agg)))
+      assert(err.getMessage.contains(s"${agg.kind.toUpperCase}(${agg.input})"),
+        s"$agg: ${err.getMessage}")
+    }
+    // a session gap must have a fixed length: a month part has none
+    val gapErr = intercept[IllegalArgumentException](StreamOps.perRowAggsSession(
+      df, Seq("k"), Seq(StreamOps.RowAgg("n", "count", "*")), "_ts", "1 month"))
+    assert(gapErr.getMessage.contains("session gap"), gapErr.getMessage)
+  }
+
+  test("per-row state schemas: a<i> accumulator fields, (s, n) structs, session list") {
+    val e = newEngine
+    val sch = StructType(Seq(
+      StructField("k", StringType), StructField("v", LongType),
+      StructField("w", DoubleType), StructField("s", StringType),
+      StructField("_ts", TimestampType)))
+    e.createStream("s23", sch)
+    val aggs = Seq(StreamOps.RowAgg("cnt", "count", "*"), StreamOps.RowAgg("sv", "sum", "v"),
+      StreamOps.RowAgg("aw", "avg", "w"), StreamOps.RowAgg("mxs", "max", "s"),
+      StreamOps.RowAgg("mnv", "min", "v"))
+    def stateOf(plan: DataFrame) =
+      plan.queryExecution.logical.collectFirst {
+        case f: FlatMapGroupsWithState => f.stateEncoder.schema
+      }.get
+    // checkpointed state of a running query: changing it breaks a resume
+    def sn(t: DataType) = StructType(Seq(StructField("s", t), StructField("n", LongType)))
+    val accs = StructType(Seq(StructField("a0", LongType), StructField("a1", sn(LongType)),
+      StructField("a2", sn(DoubleType)), StructField("a3", StringType),
+      StructField("a4", LongType)))
+    val src = e.df("s23")
+    assert(stateOf(StreamOps.perRowAggs(src, Seq("k"), aggs)) == accs)
+    assert(stateOf(StreamOps.perRowAggsWindowed(src, Seq("k"), aggs, "_ts", "1 hour")) == accs)
+    assert(stateOf(StreamOps.perRowAggsSession(src, Seq("k"), aggs, "_ts", "1 hour")) ==
+      StructType(Seq(StructField("sessions", ArrayType(StructType(Seq(
+        StructField("start", LongType), StructField("end", LongType),
+        StructField("accs", accs))))))))
+    e.dropStream("s23")
+  }
+
+  test("intervalSeconds runs no Spark job and equals Spark's epoch + INTERVAL") {
+    val e = newEngine
+    val ds = Seq("1 SECOND", "90 SECONDS", "1 HOUR", "1 DAY", "1 MONTH", "1 YEAR")
+    var got = Seq.empty[Long]
+    assert(jobsStartedBy { got = ds.map(e.intervalSeconds) } == 0)
+    val spark0 = spark.range(1).select(ds.map(d =>
+      (lit(new java.sql.Timestamp(0L)) + expr(s"INTERVAL $d")).cast("long")): _*).head()
+    assert(got == ds.indices.map(spark0.getLong))
+    assert(got == Seq(1L, 90L, 3600L, 86400L, 31L * 86400L, 365L * 86400L))
   }
 
   test("query lifecycle: terminate, pause/resume, show (AST.hs:806-906)") {

@@ -88,7 +88,7 @@ class IncrementalViewSpec extends SparkSpec {
     e.dropStream("ivs")
   }
 
-  test("a key-equality pull scans exactly one leaf: whole-bucket and delta-log mode") {
+  test("a key-equality pull scans exactly one leaf of a whole-bucket view") {
     val e = new Engine(spark)
     e.createStream("kps", schema)
     val plan = e.df("kps").groupBy(col("k")).agg(sum(col("v")).as("total"))
@@ -121,7 +121,7 @@ class IncrementalViewSpec extends SparkSpec {
     new java.io.File(new java.net.URI(leaf).getPath).listFiles().toSeq
       .map(_.getName).filter(_.endsWith(".parquet"))
 
-  test("every leaf holds one parquet file: whole-bucket triggers, delta-log triggers and compactions") {
+  test("every leaf holds one parquet file across whole-bucket rewrite triggers") {
     val e = new Engine(spark)
     e.createStream("ofs", schema)
     val plan = e.df("ofs").groupBy(col("k")).agg(sum(col("v")).as("total"))

@@ -48,7 +48,7 @@ class ViewFuzzSpec extends SparkSpec {
       "no view ever rewrote a served bucket inside the multi-view surface")
   }
 
-  test("pull racing an in-flight compaction via the maintenance seam (r14)") {
+  test("pull racing an in-flight whole-bucket rewrite via the maintenance seam (r14)") {
     // Engine.incViewSeam fires at the three transaction points of every
     // maintenance trigger; a full pull + referee compare runs INSIDE each
     // window. post-write must serve the pre-batch state (files durable,

@@ -43,7 +43,7 @@ class ViewPruningSpec extends SparkSpec {
     (k.map(x => s""""k":"$x"""").toSeq ++ n.map(x => s""""n":$x""") ++
       Seq(s""""v":$v""", s""""_ts":"$ts"""")).mkString("{", ",", "}")
 
-  test("every key pulled by equality returns the unpruned answer: null, negative, long and non-ASCII keys, both modes") {
+  test("every key pulled by equality returns the unpruned answer: null, negative, long and non-ASCII keys") {
     val e = new Engine(spark)
     e.createStream("vps", schema)
     val byK = e.df("vps").groupBy(col("k")).agg(sum(col("v")).as("total"))
@@ -104,7 +104,7 @@ class ViewPruningSpec extends SparkSpec {
     e.dropStream("vps")
   }
 
-  test("a two-key TUMBLE view prunes when both keys are fixed and answers one key alone whole, both modes") {
+  test("a two-key TUMBLE view prunes when both keys are fixed and answers one key alone whole") {
     val e = new graft.sql.SqlEngine(spark)
     val (s, v) = ("tps", "tpv")
     e.sql(s"CREATE STREAM $s (event_type STRING, v INTEGER, _ts TIMESTAMP);")
