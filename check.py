@@ -18,7 +18,7 @@ if "--no-run" not in sys.argv:
     flt = f" {','.join(sorted(ONLY))}" if ONLY else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{flt}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=7200)
+        cwd=os.path.dirname(os.path.abspath(__file__)), capture_output=True, text=True, timeout=7200)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-3000:]); sys.exit(1)
     for line in r.stderr.splitlines():

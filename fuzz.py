@@ -27,7 +27,7 @@ for i, a in enumerate(sys.argv):
 if "--no-run" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Fuzz {OUT} {N} {SEED} {ROWS}"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=7200)
+        cwd=os.path.dirname(os.path.abspath(__file__)), capture_output=True, text=True, timeout=7200)
     sys.stdout.write("\n".join(
         l for l in r.stdout.splitlines() if "[fuzz]" in l) + "\n")
     if r.returncode != 0:

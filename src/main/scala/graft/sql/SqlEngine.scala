@@ -165,7 +165,10 @@ class SqlEngine(spark: SparkSession) {
       }.toSet
       val keys = sel.groupBy.map(_.name) ++
         (if (fixedWindow(sel.from)) Seq("window_start") else Nil)
-      val incremental = !needsAppendMode(sel.from) &&
+      // HAVING filters each update-mode delta before the upsert, so a key
+      // whose aggregate stops passing it would keep its old row: such
+      // views take the complete-mode path, which recomputes every row
+      val incremental = !needsAppendMode(sel.from) && sel.having.isEmpty &&
         (!hasWindow(sel.from) || fixedWindow(sel.from)) &&
         sel.groupBy.map(_.name).forall(keyOutputs.contains) &&
         keys.nonEmpty && keys.forall(plan.columns.contains)

@@ -377,11 +377,14 @@ object StreamOps {
     })
 
     // Spark's own order: NaN above every other double and -0.0 = 0.0
-    // (SQLOrderingUtil); boxed integrals compare exactly, never through
+    // (SQLOrderingUtil); strings by their UTF-8 bytes, as UTF8String
+    // compares them (String.compareTo orders UTF-16 code units, which puts
+    // U+1F600 below U+FFFD); boxed integrals compare exactly, never through
     // doubleValue, which collapses longs that differ only below 2^53
     private def lt(a: Any, b: Any): Boolean = ((a, b) match {
       case (x: java.lang.Double, y: java.lang.Double) => SQLOrderingUtil.compareDoubles(x, y)
       case (x: java.lang.Float, y: java.lang.Float) => SQLOrderingUtil.compareFloats(x, y)
+      case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
       case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
     }) < 0
 

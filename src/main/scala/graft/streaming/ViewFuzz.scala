@@ -195,8 +195,10 @@ object ViewFuzz {
 
   // ---- execution -------------------------------------------------------------
 
-  /** Run one scenario; Report.ok = every pull equaled its recompute. */
-  def runOne(spark: SparkSession, sc: Scenario): Report = {
+  /** Run one scenario; Report.ok = every pull equaled its recompute.
+    * Without `driverCopy`, incremental views keep no driver copy, so every
+    * pull scans parquet. */
+  def runOne(spark: SparkSession, sc: Scenario, driverCopy: Boolean = true): Report = {
     val srcDir = Files.createTempDirectory(s"graft_vfz_src").toString
     val viewRoot = Files.createTempDirectory(s"graft_vfz_root").toString
     val ckptRoot = Files.createTempDirectory(s"graft_vfz_ckpt").toString
@@ -213,6 +215,7 @@ object ViewFuzz {
       .select(col("k"), (col("v") * 2 - 1).as("v"), col("_ts"))
     def mkEngine(): Engine = {
       val e = new Engine(spark)
+      if (!driverCopy) e.incViewDriverRows = 0
       e.createFileStream(stream, srcDir, schema)
       val src = if (sc.twoHop) {
         e.createFileStream(mid, midDir, schema)
@@ -484,8 +487,10 @@ object ViewFuzz {
     * breaks the multiset equality. Non-vacuity: at least one trigger must
     * rewrite a bucket an earlier generation already served, with the
     * post-write pull serving the old leaf while the new leaf's file
-    * exists. */
-  def runRaceOne(spark: SparkSession, seed: Long, i: Int): Report = {
+    * exists. Without `driverCopy`, every pull scans parquet, so the
+    * post-write pull reads the old leaf files. */
+  def runRaceOne(spark: SparkSession, seed: Long, i: Int,
+                 driverCopy: Boolean = true): Report = {
     val r = mix(seed, i + 9000)
     val name = f"vfzr_${seed}%d_${i}%02d"
     val keys = ('a' to ('a' + 2 + r.nextInt(3)).toChar).map(_.toString)
@@ -508,6 +513,7 @@ object ViewFuzz {
     spark.conf.set("spark.graft.viewRoot", viewRoot)
     val stream = s"${name}_s"; val view = s"${name}_v"
     val engine = new Engine(spark)
+    if (!driverCopy) engine.incViewDriverRows = 0
     val mismatches = scala.collection.mutable.Buffer.empty[String]
     var rewritesSeen = 0
     try {
@@ -571,11 +577,13 @@ object ViewFuzz {
     }
   }
 
-  def runRace(spark: SparkSession, seed: Long, n: Int): Seq[Report] =
-    (0 until n).map(i => runRaceOne(spark, seed, i))
+  def runRace(spark: SparkSession, seed: Long, n: Int,
+              driverCopy: Boolean = true): Seq[Report] =
+    (0 until n).map(i => runRaceOne(spark, seed, i, driverCopy))
 
-  def run(spark: SparkSession, seed: Long, n: Int): Seq[Report] =
-    (0 until n).map(i => runOne(spark, genScenario(seed, i)))
+  def run(spark: SparkSession, seed: Long, n: Int,
+          driverCopy: Boolean = true): Seq[Report] =
+    (0 until n).map(i => runOne(spark, genScenario(seed, i), driverCopy))
 
   def main(args: Array[String]): Unit = {
     val seeds = args.headOption.getOrElse("1").split(",").map(_.trim.toLong)

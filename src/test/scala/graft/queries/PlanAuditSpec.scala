@@ -83,6 +83,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.functions.{hash, lit, pmod}
     val e = new graft.sql.SqlEngine(spark)
+    // no driver copy: a view this small would be served without a scan
+    e.engine.incViewDriverRows = 0
     e.sql("CREATE STREAM pas (user_id INTEGER, value FLOAT, _ts TIMESTAMP);")
     e.sql("CREATE VIEW pav AS SELECT user_id, COUNT(*) AS c, SUM(value) AS s " +
       "FROM pas GROUP BY user_id;")

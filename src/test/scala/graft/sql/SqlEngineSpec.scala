@@ -226,6 +226,24 @@ class SqlEngineSpec extends SparkSpec {
     e.sql("DROP VIEW v5;")
   }
 
+  test("a view with HAVING drops a key whose aggregate stops passing it") {
+    val e = new SqlEngine(spark)
+    e.sql("CREATE STREAM hs (k STRING, v INTEGER, _ts TIMESTAMP);")
+    e.sql("CREATE VIEW hvw AS SELECT k, SUM(v) AS t FROM hs GROUP BY k HAVING SUM(v) < 10;")
+    def pulled = e.sql("SELECT k, t FROM hvw;").asInstanceOf[e.Rows].df.collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    e.sql("INSERT INTO hs (k, v, _ts) VALUES ('a', 5, '2024-01-01 00:00:00');")
+    e.sql("INSERT INTO hs (k, v, _ts) VALUES ('b', 1, '2024-01-01 00:00:01');")
+    e.engine.processAll()
+    assert(pulled == Set(("a", 5L), ("b", 1L)))
+    // a's sum reaches 15: batch semantics drop it from the view
+    e.sql("INSERT INTO hs (k, v, _ts) VALUES ('a', 10, '2024-01-01 00:00:02');")
+    e.engine.processAll()
+    assert(pulled == Set(("b", 1L)))
+    e.sql("DROP VIEW hvw;")
+    e.sql("DROP STREAM hs;")
+  }
+
   test("batch dialect SQL over registered tables (scalar functions)") {
     val e = new SqlEngine(spark)
     spark.createDataFrame(Seq((1L, "Hello World", 4.0), (2L, "bye", 16.0)))

@@ -599,9 +599,23 @@ class EngineSpec extends SparkSpec {
       e.insert(s, r18("a", 7, 8.0, "zebra", "2024-01-01 00:00:03"))
     }
     e.processAll()
-    forms.foreach { case (s, out) =>
+    forms.foreach { case (_, out) =>
       val all = emitted(out)
       assert(all.last == (4L, 16L, 5.0, "zebra", 1L), s"$out after batch 2: ${all.toSeq}")
+    }
+    // strings order by their UTF-8 bytes, as Spark's max does: U+1F600
+    // above U+FFFD (their UTF-16 code units order the other way)
+    val (replacement, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    assert(spark.createDataset(Seq(replacement, emoji))(Encoders.STRING)
+      .agg(max("value")).head().getString(0) == emoji)
+    forms.foreach { case (s, _) =>
+      e.insert(s, r18("a", 0, 5.0, emoji, "2024-01-01 00:00:04"),
+        r18("a", 0, 5.0, replacement, "2024-01-01 00:00:05"))
+    }
+    e.processAll()
+    forms.foreach { case (s, out) =>
+      val all = emitted(out)
+      assert(all.last == (6L, 16L, 5.0, emoji, 0L), s"$out after batch 3: ${all.toSeq}")
       e.terminate(out); e.dropStream(s)
     }
   }
@@ -635,25 +649,34 @@ class EngineSpec extends SparkSpec {
     val e = newEngine
     val sch = StructType(Seq(
       StructField("k", StringType), StructField("v", DoubleType),
-      StructField("_ts", TimestampType)))
+      StructField("t", StringType), StructField("_ts", TimestampType)))
     // each key sees NaN on one side of 1.0: a `<` over doubles keeps the
-    // first value it sees for one of MIN/MAX, whatever the row order
-    val recs = Seq(("a", "1.0", "00"), ("a", "NaN", "01"), ("b", "NaN", "00"), ("b", "1.0", "01"))
-      .map { case (k, v, s) => s"""{"k":"$k","v":$v,"_ts":"2024-01-01 00:00:$s"}""" }
+    // first value it sees for one of MIN/MAX, whatever the row order; and
+    // U+FFFD on one side of U+1F600, which UTF-8 bytes order below it and
+    // UTF-16 code units above it
+    val (replacement, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    val recs = Seq(("a", "1.0", replacement, "00"), ("a", "NaN", emoji, "01"),
+        ("b", "NaN", emoji, "00"), ("b", "1.0", replacement, "01"))
+      .map { case (k, v, t, s) =>
+        s"""{"k":"$k","v":$v,"t":"$t","_ts":"2024-01-01 00:00:$s"}""" }
     val forms = perRowForms(e, 20, sch, Seq(StreamOps.RowAgg("n", "count", "*"),
-      StreamOps.RowAgg("mn", "min", "v"), StreamOps.RowAgg("mx", "max", "v")))
+      StreamOps.RowAgg("mn", "min", "v"), StreamOps.RowAgg("mx", "max", "v"),
+      StreamOps.RowAgg("mnt", "min", "t"), StreamOps.RowAgg("mxt", "max", "t")))
     forms.foreach { case (s, _) => e.insert(s, recs: _*) }
     e.processAll()
     // Double NaN != NaN: compare the rendered values
     val batch = spark.read.schema(sch)
       .json(spark.createDataset(recs)(Encoders.STRING))
-      .groupBy("k").agg(min("v"), max("v")).collect()
-      .map(r => (r.getString(0), r.getDouble(1).toString, r.getDouble(2).toString)).toSet
-    assert(batch == Set(("a", "1.0", "NaN"), ("b", "1.0", "NaN")), s"batch: $batch")
+      .groupBy("k").agg(min("v"), max("v"), min("t"), max("t")).collect()
+      .map(r => (r.getString(0), r.getDouble(1).toString, r.getDouble(2).toString,
+        r.getString(3), r.getString(4))).toSet
+    assert(batch == Set(("a", "1.0", "NaN", replacement, emoji),
+      ("b", "1.0", "NaN", replacement, emoji)), s"batch: $batch")
     forms.foreach { case (s, out) =>
       val finals = spark.table(out).collect().groupBy(_.getString(0)).values
         .map(_.maxBy(_.getLong(1)))
-        .map(r => (r.getString(0), r.getDouble(2).toString, r.getDouble(3).toString)).toSet
+        .map(r => (r.getString(0), r.getDouble(2).toString, r.getDouble(3).toString,
+          r.getString(4), r.getString(5))).toSet
       assert(finals == batch, s"$out per-row finals $finals vs batch $batch")
       e.terminate(out); e.dropStream(s)
     }

@@ -39,6 +39,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("upsert rewrites only affected buckets; an unchanged key's files are untouched") {
     val e = new Engine(spark)
+    e.incViewDriverRows = 0 // no driver copy: the pulls below scan parquet
     val buckets = 8
     val (k1, k2, b1, b2) = twoKeysDifferentBuckets(buckets)
     e.createStream("ivs", schema)
@@ -90,6 +91,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("a key-equality pull scans exactly one leaf of a whole-bucket view") {
     val e = new Engine(spark)
+    e.incViewDriverRows = 0 // no driver copy: the pulls below scan parquet
     e.createStream("kps", schema)
     val plan = e.df("kps").groupBy(col("k")).agg(sum(col("v")).as("total"))
     e.createViewIncremental("kpw", plan, keys = Seq("k"), buckets = 16)
@@ -146,6 +148,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("a pull over a view serving more than 32 buckets plans without a Spark job") {
     val e = new Engine(spark)
+    e.incViewDriverRows = 0 // no driver copy: the pulls below scan parquet
     e.createStream("wbs", schema)
     val plan = e.df("wbs").groupBy(col("k")).agg(sum(col("v")).as("total"))
     e.createViewIncremental("wbw", plan, keys = Seq("k"))
@@ -168,6 +171,80 @@ class IncrementalViewSpec extends SparkSpec {
       want.view.filterKeys(_ == "k7").toMap)
     e.terminate("wbw")
     e.dropStream("wbs")
+  }
+
+  test("pulls of a view under the driver-copy bound start no Spark job and match the parquet path") {
+    // the same stream and view twice: one engine keeps each generation's
+    // rows on the driver, the other (bound 0) serves from parquet
+    val copy = new graft.sql.SqlEngine(spark)
+    val files = new graft.sql.SqlEngine(spark)
+    files.engine.incViewDriverRows = 0
+    val views = Seq(copy -> "dcv", files -> "dfv")
+    views.foreach { case (e, v) =>
+      e.sql(s"CREATE STREAM ${v}_s (k STRING, v INTEGER, _ts TIMESTAMP);")
+      e.sql(s"CREATE VIEW $v AS SELECT k, SUM(v) AS total FROM ${v}_s GROUP BY k;")
+      // two triggers: the second upserts over the first generation's rows
+      Seq((1 to 40, 1), (5 to 9, 10)).foreach { case (ks, x) =>
+        ks.foreach(i => e.sql(
+          s"INSERT INTO ${v}_s (k, v, _ts) VALUES ('k$i', ${x * i}, '2024-01-01 00:00:00');"))
+        e.engine.processAll()
+      }
+    }
+    Seq("WHERE k = 'k7'", "WHERE total > 50", "").foreach { where =>
+      def pull(e: graft.sql.SqlEngine, v: String) = e.batch(s"SELECT k, total FROM $v $where;")
+      var fromCopy: Array[org.apache.spark.sql.Row] = null
+      assert(jobsStartedBy { fromCopy = pull(copy, "dcv").collect() } == 0, where)
+      val fromFiles = pull(files, "dfv")
+      assert(fromCopy.toSet == fromFiles.collect().toSet && fromCopy.nonEmpty, where)
+      assert(pull(copy, "dcv").schema == fromFiles.schema, where)
+    }
+    assert(copy.batch("SELECT total FROM dcv WHERE k = 'k7';").head().getLong(0) == 77L)
+    views.foreach { case (e, v) => e.sql(s"DROP VIEW $v;"); e.sql(s"DROP STREAM ${v}_s;") }
+  }
+
+  test("a view of wide rows under the row bound is not collected to the driver, live or on restart") {
+    // 30 keys of 4 KB random text: far under the row bound, but their
+    // parquet bytes alone exceed the 32 KB budget
+    val rnd = new scala.util.Random(7)
+    val wide = (1 to 30).map(i => s"$i-" + rnd.alphanumeric.take(4096).mkString)
+    val srcDir = Files.createTempDirectory("graft_wdsrc").toString
+    spark.conf.set("spark.graft.checkpointRoot", Files.createTempDirectory("graft_wdckpt").toString)
+    spark.conf.set("spark.graft.viewRoot", Files.createTempDirectory("graft_wdroot").toString)
+    try {
+      def mkEngine(): Engine = {
+        val e = new Engine(spark)
+        e.incViewDriverBytes = 32 * 1024
+        e.createFileStream("wds", srcDir, schema)
+        e.createViewIncremental("wdv",
+          e.df("wds").groupBy(col("k")).agg(sum(col("v")).as("total")), Seq("k"), buckets = 4)
+        e
+      }
+      def check(e: Engine): Unit = {
+        var pulled: Array[org.apache.spark.sql.Row] = null
+        assert(jobsStartedBy { pulled = e.pull("wdv").collect() } > 0, "served from the driver")
+        assert(pulled.map(r => r.getString(0) -> r.getLong(1)).toMap ==
+          wide.zipWithIndex.map { case (k, i) => k -> i.toLong }.toMap)
+        assert(e.incViewCopiesCollected.get == 0)
+      }
+      val e1 = mkEngine()
+      Files.writeString(java.nio.file.Paths.get(srcDir, "f1.json"),
+        wide.zipWithIndex.map { case (k, i) => rec(k, i, "2024-01-01 00:00:00") }.mkString("\n"))
+      e1.processAll()
+      check(e1)
+      // a view of narrow rows fits the same budget, so it is collected
+      e1.createViewIncremental("ndv",
+        e1.df("wds").groupBy(col("v")).agg(count(lit(1)).as("n")), Seq("v"), buckets = 4)
+      e1.processAll()
+      assert(e1.incViewCopiesCollected.get == 1)
+      assert(jobsStartedBy(e1.pull("ndv").collect()) == 0)
+      e1.terminate("wdv"); e1.terminate("ndv")
+      // recovery reads the manifest; the copy's parquet bytes are over the budget
+      val e2 = mkEngine()
+      try check(e2) finally e2.terminate("wdv")
+    } finally {
+      spark.conf.unset("spark.graft.checkpointRoot")
+      spark.conf.unset("spark.graft.viewRoot")
+    }
   }
 
   test("TUMBLE-window view via the dialect maintains incrementally by (key, window_start)") {
@@ -321,6 +398,7 @@ class IncrementalViewSpec extends SparkSpec {
     val (la, lb) = (s"g5/graft_bucket=$ba", s"g7-c/graft_bucket=$bb")
     withHandWrittenView("hwo", Map(la -> Seq("a" -> 3L), lb -> Seq("b" -> 5L)),
         Seq(ba -> Seq(la), bb -> Seq(lb))) { (e, dir) =>
+      e.incViewDriverRows = 0 // no driver copy: the key pull below scans parquet
       Files.writeString(java.nio.file.Paths.get(dir, "zones-g7.txt"), "not\ta zone map")
       e.createViewIncremental("hwo", sumView(e, "hwo"), Seq("k"))
       def served = e.pull("hwo").collect().map(r => r.getString(0) -> r.getLong(1)).toMap

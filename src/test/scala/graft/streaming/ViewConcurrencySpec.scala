@@ -41,8 +41,9 @@ class ViewConcurrencySpec extends SparkSpec {
     else None
   }
 
-  private def runRace(mode: String): Unit = {
+  private def runRace(mode: String, driverCopy: Boolean = true): Unit = {
     val e = new Engine(spark)
+    if (!driverCopy) e.incViewDriverRows = 0
     val stream = s"cr_$mode"
     val view = s"crv_$mode"
     e.createStream(stream, schema)
@@ -103,5 +104,10 @@ class ViewConcurrencySpec extends SparkSpec {
 
   test("whole-bucket upserts: N reader threads pull consistent prefix states mid-flip") {
     runRace("wb")
+  }
+
+  test("whole-bucket upserts served from parquet: readers pull consistent prefix states mid-flip") {
+    // no driver copy: the readers scan the recorded files of each generation
+    runRace("wbp", driverCopy = false)
   }
 }

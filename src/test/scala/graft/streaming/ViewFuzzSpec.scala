@@ -62,6 +62,18 @@ class ViewFuzzSpec extends SparkSpec {
     assert(bad.isEmpty, bad.map(r => s"${r.name}: ${r.detail}").mkString("\n"))
   }
 
+  test("view fuzzer and race tier with every pull served from parquet") {
+    // the tests above run views small enough for a driver copy, whose
+    // pulls scan no file; here no view keeps one, so the same referee
+    // checks the pruned parquet scans, and the race tier's post-write
+    // pull reads the old generation's leaf files
+    val reports = ViewFuzz.run(spark, 1L, 2, driverCopy = false) ++
+      ViewFuzz.runRace(spark, 1L, 1, driverCopy = false)
+    val bad = reports.filterNot(_.ok)
+    assert(bad.isEmpty, bad.map(r => s"${r.name}: ${r.detail}").mkString("\n"))
+    assert(reports.count(_.name.contains("_inc")) == 1)
+  }
+
   test("view fuzzer under RocksDB state store: one pinned pass") {
     // the view maintenance queries' AGGREGATION state rides the state
     // store; one pass under the production provider extends the

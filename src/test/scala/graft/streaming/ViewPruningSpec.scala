@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -44,7 +45,14 @@ class ViewPruningSpec extends SparkSpec {
       Seq(s""""v":$v""", s""""_ts":"$ts"""")).mkString("{", ",", "}")
 
   test("every key pulled by equality returns the unpruned answer: null, negative, long and non-ASCII keys") {
+    // both serving paths: pruned parquet scans, and the driver copy
+    // (filtered on the driver, no scan at all)
+    Seq(false, true).foreach(driverCopy => keyDifferential(driverCopy))
+  }
+
+  private def keyDifferential(driverCopy: Boolean): Unit = {
     val e = new Engine(spark)
+    if (!driverCopy) e.incViewDriverRows = 0
     e.createStream("vps", schema)
     val byK = e.df("vps").groupBy(col("k")).agg(sum(col("v")).as("total"))
     val byN = e.df("vps").groupBy(col("n")).agg(sum(col("v")).as("total"))
@@ -79,7 +87,9 @@ class ViewPruningSpec extends SparkSpec {
           val pulled = e.pull(view, where)
           assert(rows(pulled) == expected(full, where), s"$view $where")
           assert(rows(pulled).size == 1, s"$view $where")
-          assert(scannedLeaves(pulled)._1 == Set(bucketOf(spark, buckets, lit(v))),
+          if (driverCopy) assert(pulled.queryExecution.executedPlan
+            .isInstanceOf[LocalTableScanExec], s"$view $where was not served from the driver")
+          else assert(scannedLeaves(pulled)._1 == Set(bucketOf(spark, buckets, lit(v))),
             s"$view $where was not pruned")
       }
       // null-safe equality with a NULL literal: correct, pruned or not
@@ -106,6 +116,7 @@ class ViewPruningSpec extends SparkSpec {
 
   test("a two-key TUMBLE view prunes when both keys are fixed and answers one key alone whole") {
     val e = new graft.sql.SqlEngine(spark)
+    e.engine.incViewDriverRows = 0 // no driver copy: the key pulls scan parquet
     val (s, v) = ("tps", "tpv")
     e.sql(s"CREATE STREAM $s (event_type STRING, v INTEGER, _ts TIMESTAMP);")
     e.sql(s"""CREATE VIEW $v AS SELECT event_type, SUM(v) AS total
